@@ -1,9 +1,9 @@
 """``catalog_rw``: the reference CLI's own surface on a growing catalog.
 
 Each cycle spools one JSONL batch across the four sources and runs
-``cli.cmd_collect`` on it, then four ``cmd_search`` calls (common, mid and
-rare terms of a Zipf vocabulary, with and without a source or data-type
-filter), ``cmd_analytics``, ``cmd_status`` and ``cmd_export``. A third of
+``cli.cmd_collect`` on it, then eight ``cmd_search`` calls (common, mid
+and rare terms of a Zipf vocabulary, with and without a source or
+data-type filter), ``cmd_analytics``, ``cmd_status`` and ``cmd_export``. A third of
 each batch reuses record ids offered by earlier batches, so the left-anti
 upsert discards real work; the API keys held change per batch, so the
 compliance gate quarantines a varying share. :class:`CatalogModel` knows
@@ -212,7 +212,7 @@ class CatalogRW:
             self.inserted += got.get("_inserted", 0)
 
         rng = m.rng
-        for band in ((0, 10), (10, 200), (200, VOCAB), (0, 200)):
+        for band in ((0, 10), (10, 200), (200, VOCAB), (0, 200)) * 2:
             term = word(int(rng.integers(*band)))
             mode = int(rng.integers(0, 3))
             src = SOURCES[int(rng.integers(0, 4))] if mode == 1 else None

@@ -31,6 +31,9 @@ def pin_environment(work: str) -> None:
         SPARK_GRAFT_DRIVER_MEM=os.environ.get("SPARK_GRAFT_DRIVER_MEM", "3g"),
         TMPDIR=os.path.join(work, "tmp"),
         PYTHONWARNINGS="ignore",
+        # every JVM the launcher starts: temp files under ``work``, and no
+        # hsperfdata file in the system temp dir
+        JAVA_TOOL_OPTIONS=f"-XX:-UsePerfData -Djava.io.tmpdir={work}/tmp",
     )
     os.environ["PYTHONPATH"] = os.pathsep.join(
         p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
@@ -46,7 +49,6 @@ def start_spark(work: str):
         "perfbench",
         extra_conf={
             "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
-            "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={work}/tmp",
             "spark.ui.showConsoleProgress": "false",
         },
     )
