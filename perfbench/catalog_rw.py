@@ -159,6 +159,9 @@ def _col(result, name):
 
 class CatalogRW:
     name = "catalog_rw"
+    # a cycle takes most of the default window; a slow first cycle must
+    # not leave a run with half the samples
+    min_cycles = 2
 
     def __init__(self, ctx) -> None:
         self.ctx = ctx

@@ -137,7 +137,7 @@ def main(argv=None) -> int:
             wl.cold()
         phases["cold"] = time.perf_counter() - t
         window = a.seconds * (2 if ctx.trace else 1)
-        min_cycles = 4 if ctx.trace else 1
+        min_cycles = max(getattr(wl, "min_cycles", 1), 4 if ctx.trace else 1)
         if ctx.trace:
             # JIT warm-up and the growing catalog make later cycles differ
             # from earlier ones: one more unrecorded cycle, then traced and
