@@ -208,7 +208,6 @@ class Ctx:
                 "setup_s": (setup_s, "s"),
                 "op_p50_ms": (1000.0 * statistics.median(lat) if lat else 0.0, "ms"),
                 "ops_per_s": (len(lat) / sum(lat) if lat else 0.0, "1/s"),
-                "peak_rss_mb": (self.peak_rss_mb(), "MB"),
             }
             metrics = {k: allm[k] for k in e2e}
         return {

@@ -13,7 +13,7 @@ import statistics
 
 from common import percentile, tail
 
-E2E = ["setup_s", "op_p50_ms", "ops_per_s", "peak_rss_mb"]
+E2E = ["setup_s", "op_p50_ms", "ops_per_s"]
 
 #: modules whose registry queries the workloads call
 QUERY_MODULES = [
@@ -45,6 +45,7 @@ PER_LAYER: list[tuple[str, str]] = [
     ("materialize.shared_misses", "count"),
     ("materialize.shared_hit_ratio", "ratio"),
     ("materialize.pinned_mb", "MB"),
+    ("peak_rss_mb", "MB"),
     ("curate.mount_ms", "ms"),
     ("curate.files_written", "count"),
     ("curate.mb_written", "MB"),
@@ -106,6 +107,7 @@ def per_layer(ctx, extra: dict[str, float]) -> dict[str, tuple[float, str]]:
         "materialize.shared_misses": misses / ops,
         "materialize.shared_hit_ratio": hits / (hits + misses) if hits + misses else 0.0,
         "materialize.pinned_mb": ctx.pinned_peak,
+        "peak_rss_mb": ctx.peak_rss_mb(),
         "curate.mount_ms": _mean_ms(tot, "curate.mount"),
         "ann_store.save_ms": _mean_ms(tot, "ann_store.save"),
         "ann_store.serve_ms": _mean_ms(tot, "ann_store.serve"),

@@ -1,6 +1,6 @@
 """Benchmark entry point: one workload, one seed, one closed-loop client.
 
-    python3 perfbench/run.py --workload catalog_rw --seed 1 --seconds 8 --trace 0
+    python3 perfbench/run.py --workload catalog_rw --seed 1 --seconds 6 --trace 0
 
 Run from the repository root. The last stdout line is a JSON object with
 ``correct``, ``attempted``, ``failed`` and ``metrics``: the end-to-end
