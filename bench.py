@@ -463,7 +463,7 @@ def main() -> None:
         if pinned_bytes(spark) > pin_budget:
             shared_release(spark)
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     out = {
         "metric": "headline_suite_total_wall",
         "value": round(sum(timings.values()), 3),

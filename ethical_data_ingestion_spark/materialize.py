@@ -36,6 +36,17 @@ call site at once:
 
 Select globally with the env var ``SPARK_GRAFT_MATERIALIZE`` or per call
 with ``mode=``.
+
+Pins reused across calls live in ONE session-bound store, ``_SHARED``:
+:func:`shared` (get-or-build), :func:`shared_publish` /
+:func:`shared_get` (a producer that always rebuilds) and
+:func:`shared_value` (scalars derived from an artifact). Pinned blocks
+never free themselves, so there are three release paths, each freeing
+through the mode's one routine (``_FREE``):
+
+* :func:`unpin`             — one loop round, once its successor is pinned;
+* :func:`shared_release`    — store entries; later callers rebuild;
+* :func:`transient_release` — every persistent RDD the store does not own.
 """
 
 from __future__ import annotations
@@ -115,16 +126,14 @@ def _cap_checkpoint_stats(df: DataFrame) -> DataFrame:
         return df
 
 
-#: id(pinned df) -> (weakref to it, persistent-RDD ids created by its pin).
-#: localCheckpoint registers its RDD in SparkContext.persistentRdds with a
-#: STRONG reference — dropping the Python DataFrame never frees the blocks
-#: (measured: block-manager bytes unchanged after del + GC both sides).
-#: :func:`release` uses these ids to unpersist deterministically.
-_PIN_RDD_IDS: dict[int, tuple] = {}
-
-
-def _persistent_ids(sc) -> set:
-    return set(sc._jsc.getPersistentRDDs().keySet().toArray())
+def _mode(mode: str | None = None) -> str:
+    mode = mode or os.environ.get(_ENV_VAR, "local")
+    if mode not in _MODES:
+        raise ValueError(
+            f"materialize mode {mode!r} not in {_MODES} "
+            f"(set via mode= or ${_ENV_VAR})"
+        )
+    return mode
 
 
 def materialize(df: DataFrame, mode: str | None = None) -> DataFrame:
@@ -132,31 +141,9 @@ def materialize(df: DataFrame, mode: str | None = None) -> DataFrame:
     reuses. Policy from ``mode`` or ``$SPARK_GRAFT_MATERIALIZE`` (default
     ``local``); see module docstring for the cluster-durability tradeoffs.
     """
-    mode = mode or os.environ.get(_ENV_VAR, "local")
-    if mode not in _MODES:
-        raise ValueError(
-            f"materialize mode {mode!r} not in {_MODES} "
-            f"(set via mode= or ${_ENV_VAR})"
-        )
+    mode = _mode(mode)
     if mode == "local":
-        import weakref
-
-        sc = df.sparkSession.sparkContext
-        try:
-            before = _persistent_ids(sc)
-        except Exception:  # noqa: BLE001 — tracking is best-effort
-            before = None
-        pinned = _cap_checkpoint_stats(df.localCheckpoint(eager=True))
-        if before is not None:
-            try:
-                new = _persistent_ids(sc) - before
-                if new:
-                    _PIN_RDD_IDS[id(pinned)] = (
-                        weakref.ref(pinned), sorted(new)
-                    )
-            except Exception:  # noqa: BLE001
-                pass
-        return pinned
+        return _cap_checkpoint_stats(df.localCheckpoint(eager=True))
     if mode == "disk":
         pinned = df.persist(StorageLevel.DISK_ONLY)
         pinned.count()
@@ -179,31 +166,92 @@ def materialize(df: DataFrame, mode: str | None = None) -> DataFrame:
     return df.checkpoint(eager=True)
 
 
-#: key -> (session, pinned DataFrame). See :func:`shared`.
-_SHARED: dict[tuple, tuple[object, DataFrame]] = {}
+def _persistent_ids(spark) -> set | None:
+    """Ids in ``SparkContext.persistentRdds``, or None if unreadable."""
+    try:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+    except Exception:  # noqa: BLE001 — ownership tracking is best-effort
+        return None
+
+
+def _unpersist_ids(spark, ids) -> int:
+    """Unpersist the persistent RDDs with these ids; returns how many."""
+    n = 0
+    try:
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        for rid in ids:
+            jrdd = jmap.get(rid)
+            if jrdd is not None:
+                jrdd.unpersist(False)
+                n += 1
+    except Exception:  # noqa: BLE001 — releasing is best-effort hygiene
+        pass
+    return n
+
+
+#: mode -> how to free one pin, given the persistent-RDD ids it owns.
+#: ``local`` unpersists the owned ids: ``persistentRdds`` holds STRONG
+#: references, so dropping the DataFrame never frees a localCheckpoint's
+#: blocks (measured: block-manager bytes unchanged after del + GC both
+#: sides), and without ids there is nothing safe to free. ``disk`` drops
+#: the CacheManager entry and its blocks. ``checkpoint`` pins are files:
+#: Spark's ContextCleaner removes them when the RDD is GC'd iff
+#: ``spark.cleaner.referenceTracking.cleanCheckpoints`` is set, and the
+#: checkpoint dir itself is deployment-owned.
+_FREE = {
+    "local": lambda df, owned: _unpersist_ids(df.sparkSession, owned or ()),
+    "disk": lambda df, owned: df.unpersist(),
+    "checkpoint": lambda df, owned: None,
+}
+
+
+#: key -> (session, value, owned persistent-RDD ids). A pinned artifact
+#: owns the ids its own pin registered (None when that snapshot failed);
+#: a plain value owns (). The one session-bound store: see :func:`shared`.
+_SHARED: dict[tuple, tuple[object, object, tuple | None]] = {}
+
+
+def _live(key: tuple, spark) -> tuple | None:
+    """This session's entry under ``key``, or None. A miss evicts every
+    other session's entries (not just this key): pinned blocks die with
+    their executors, and the store must not keep a dead session's object
+    graphs alive."""
+    hit = _SHARED.get(key)
+    if hit is not None and hit[0] is spark:
+        return hit
+    for k in [k for k, e in _SHARED.items() if e[0] is not spark]:
+        del _SHARED[k]
+    return None
+
+
+def shared_value(key: tuple, spark, compute):
+    """Session-scoped cache of a plain value (a scalar count, never data
+    rows): ``compute()`` runs at most once per (key, session)."""
+    hit = _live(key, spark)
+    if hit is not None:
+        return hit[1]
+    value = compute()
+    _SHARED[key] = (spark, value, ())
+    return value
 
 
 def shared_get(key: tuple, spark) -> DataFrame | None:
     """The pinned DataFrame published under ``key`` for this session, or
-    None. Lets a consumer reuse an upstream artifact WITHOUT making the
-    producer's own repeat runs serve from cache (see ``dedup_q``: the
-    pair query always rebuilds; cluster resolution reads the published
-    table)."""
-    hit = _SHARED.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    if hit is not None:
-        # stale session: drop the entry so a host cycling sessions doesn't
-        # keep dead-session DataFrame graphs referenced for process life.
-        del _SHARED[key]
-    return None
+    None. Lets a producer publish an artifact WITHOUT its own repeat runs
+    serving from cache (see ``dedup_q.dedup_jaccard_pairs``: the pair
+    query always rebuilds; consumers read the published table)."""
+    hit = _live(key, spark)
+    return None if hit is None else hit[1]
 
 
 def shared_publish(key: tuple, spark, df: DataFrame) -> DataFrame:
-    """Materialize ``df`` and publish it under ``key``; returns the
-    pinned result."""
+    """Materialize ``df`` and publish it under ``key``, recording the
+    persistent RDDs its pin registered; returns the pinned result."""
+    before = _persistent_ids(spark)
     pinned = materialize(df)
-    _SHARED[key] = (spark, pinned)
+    after = _persistent_ids(spark)
+    owned = None if before is None or after is None else tuple(after - before)
+    _SHARED[key] = (spark, pinned, owned)
     return pinned
 
 
@@ -213,81 +261,28 @@ def shared(key: tuple, spark, build) -> DataFrame:
     callers — other queries in the same suite, or repeat calls — reuse
     the pinned blocks.
 
-    This is the pipeline-shaped sharing the round-3 verdict prescribed
-    for the ranked-orders materialization, generalized: a production
-    corpus pipeline persists its expensive intermediate tables (shingle
-    sets, candidate pairs) ONCE and feeds every downstream consumer from
-    them, so queries that model those consumers should too. Entries are
-    invalidated when the session changes (pinned blocks die with their
-    executors); keys embed every parameter the build depends on."""
-    hit = _SHARED.get(key)
-    if hit is not None and hit[0] is spark:
+    A production corpus pipeline persists its expensive intermediate
+    tables (shingle sets, candidate pairs) ONCE and feeds every
+    downstream consumer from them, so queries that model those consumers
+    do too. Entries are invalidated when the session changes; keys embed
+    every parameter the build depends on (but not the materialize mode:
+    release the store before switching modes)."""
+    hit = _live(key, spark)
+    if hit is not None:
         return hit[1]
-    # evict every stale-session entry on miss (not just this key): the
-    # cache must not hold the previous session's object graphs alive.
-    for k in [k for k, (s, _) in _SHARED.items() if s is not spark]:
-        del _SHARED[k]
-    df = materialize(build())
-    _SHARED[key] = (spark, df)
-    return df
+    return shared_publish(key, spark, build())
 
 
 def unpin(df: DataFrame | None, mode: str | None = None) -> None:
     """Release a :func:`materialize`'d DataFrame once NO downstream
     consumer remains (e.g. an iterative loop's previous round after the
-    next round has been pinned).
-
-    * ``disk``       — ``unpersist()`` drops the cached plan entry and its
-                       blocks; without this, every loop round would stay
-                       registered in the CacheManager for session life.
-    * ``local``      — no-op: localCheckpoint blocks belong to their
-                       truncated-lineage RDD and unpersisting them would
-                       make the DataFrame unrecomputable if any reference
-                       survives; they are evicted LRU under pressure and
-                       die with the session (the mode is the single-box
-                       fast path, not the long-lived-cluster one).
-    * ``checkpoint`` — no-op here: reliable checkpoint files are removed
-                       by Spark's ContextCleaner when the RDD is GC'd iff
-                       ``spark.cleaner.referenceTracking.cleanCheckpoints``
-                       is set (recommended for cluster deployments), and
-                       the checkpoint dir itself is deployment-owned.
-    """
-    if df is None:
-        return
-    mode = mode or os.environ.get(_ENV_VAR, "local")
-    if mode == "disk":
-        df.unpersist()
-
-
-def release(df: DataFrame | None) -> int:
-    """Deterministically FREE a local-mode pin's block-manager memory.
-
-    Contract: the caller guarantees NO consumer touches ``df`` again —
-    after release the DataFrame is unrecomputable (its lineage was
-    truncated by the checkpoint). This is the between-workload memory
-    budget the long-suite bench needs (DEPLOY §14): pinned artifacts
-    accumulate in SparkContext.persistentRdds (strong refs — GC never
-    frees them) and squeeze execution memory for every later query.
-    Returns the number of RDDs unpersisted. No-op for non-local modes
-    (``disk`` pins release via :func:`unpin`; reliable checkpoints are
-    files, not blocks)."""
-    if df is None:
-        return 0
-    ref_ids = _PIN_RDD_IDS.pop(id(df), None)
-    if ref_ids is None or ref_ids[0]() is not df:
-        return 0
-    sc = df.sparkSession.sparkContext
-    n = 0
-    try:
-        jmap = sc._jsc.getPersistentRDDs()
-        for rid in ref_ids[1]:
-            jrdd = jmap.get(rid)
-            if jrdd is not None:
-                jrdd.unpersist(False)
-                n += 1
-    except Exception:  # noqa: BLE001 — releasing is best-effort hygiene
-        return n
-    return n
+    next round has been pinned). Under ``disk`` this drops the cached
+    plan entry and its blocks — without it, every loop round would stay
+    registered in the CacheManager for session life. Under ``local`` it
+    is a no-op: a loop round owns no tracked ids, and its blocks are
+    freed by :func:`transient_release` once the query returns."""
+    if df is not None:
+        _FREE[_mode(mode)](df, ())
 
 
 def transient_release(spark) -> int:
@@ -303,34 +298,20 @@ def transient_release(spark) -> int:
     Fail-safe rules (a wrong sweep frees blocks whose lineage was
     truncated — a later consumer dies with missing blocks, worse than
     any memory squeeze): no-op unless the materialize mode is ``local``
-    (under ``disk`` the pins are reliable-checkpoint files and _SHARED
-    ownership is not tracked via RDD ids at all), and no-op when ANY
-    live shared artifact of this session lacks a tracking record (the
-    ownership set would be incomplete, so the sweep could hit a shared
-    artifact's blocks)."""
-    if os.environ.get(_ENV_VAR, "local") != "local":
+    (other modes' pins are not lineage-truncated executor blocks), and
+    no-op when ANY entry of this session failed its ownership snapshot
+    (the ownership set would be incomplete, so the sweep could hit a
+    shared artifact's blocks)."""
+    if _mode() != "local":
         return 0
     owned: set = set()
-    for s, df in _SHARED.values():
+    for s, _, ids in _SHARED.values():
         if s is spark:
-            e = _PIN_RDD_IDS.get(id(df))
-            if e is None or e[0]() is not df:
+            if ids is None:
                 return 0  # untracked shared artifact: keep everything
-            owned.update(e[1])
-    n = 0
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in set(jmap.keySet().toArray()) - owned:
-            jrdd = jmap.get(rid)
-            if jrdd is not None:
-                jrdd.unpersist(False)
-                n += 1
-    except Exception:  # noqa: BLE001 — best-effort hygiene
-        return n
-    # sweep trackers whose DataFrames are gone
-    for k in [k for k, (r, _) in _PIN_RDD_IDS.items() if r() is None]:
-        del _PIN_RDD_IDS[k]
-    return n
+            owned.update(ids)
+    ids = _persistent_ids(spark)
+    return 0 if ids is None else _unpersist_ids(spark, ids - owned)
 
 
 def pinned_bytes(spark) -> int:
@@ -345,17 +326,20 @@ def pinned_bytes(spark) -> int:
 
 
 def shared_release(spark, predicate=None) -> int:
-    """Evict session-shared artifacts and FREE their blocks (see
-    :func:`release` for the contract — later :func:`shared` callers
-    simply rebuild). ``predicate(key)`` selects entries; None releases
-    every entry of this session. Returns the number of artifacts
-    released. The bench calls this between family blocks so each block's
-    timings run against a clean block manager instead of the whole
-    suite's accumulated artifact set."""
+    """Evict this session's store entries and FREE their pins' blocks.
+    ``predicate(key)`` selects entries; None releases every entry of
+    this session. Returns the number of entries evicted. The caller
+    guarantees no consumer touches a released DataFrame again (a local
+    pin's lineage is truncated, so it cannot be recomputed); later
+    :func:`shared` callers simply rebuild. The bench calls this between
+    family blocks so each block's timings run against a clean block
+    manager instead of the whole suite's accumulated artifact set."""
+    free = _FREE[_mode()]
     n = 0
-    for k in [k for k, (s, _) in _SHARED.items()
-              if s is spark and (predicate is None or predicate(k))]:
-        _, df = _SHARED.pop(k)
-        release(df)
+    for k in [k for k, e in _SHARED.items()
+              if e[0] is spark and (predicate is None or predicate(k))]:
+        _, value, owned = _SHARED.pop(k)
+        if isinstance(value, DataFrame):
+            free(value, owned)
         n += 1
     return n

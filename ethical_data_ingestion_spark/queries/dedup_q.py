@@ -68,12 +68,9 @@ def _truth_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-run REBUILD of this truth set — pure re-derivation of the
     published artifact (guide §2.4: don't recompute what the pipeline
     already persisted)."""
-    pairs = shared_get((*_PAIR_KEY, sf_dir), spark)
-    if pairs is None:
-        pairs = shared_publish(
-            (*_PAIR_KEY, sf_dir), spark, _build_jaccard_pairs(spark, sf_dir)
-        )
-    return pairs
+    return shared(
+        (*_PAIR_KEY, sf_dir), spark, lambda: _build_jaccard_pairs(spark, sf_dir)
+    )
 
 
 def _build_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -299,11 +296,7 @@ def neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same transitive closure as a recursive CTE. Clusters over the
     published pair table when one exists — the pipeline order (pairs →
     clusters), not a re-derivation — else builds and publishes it."""
-    pairs = shared_get((*_PAIR_KEY, sf_dir), spark)
-    if pairs is None:
-        pairs = shared_publish(
-            (*_PAIR_KEY, sf_dir), spark, _build_jaccard_pairs(spark, sf_dir)
-        )
+    pairs = _truth_pairs(spark, sf_dir)
     comp = D.connected_components(pairs, "id1", "id2")
     sizes = comp.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("cluster_size"))
     return (
@@ -698,11 +691,7 @@ def _tiered_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             fa.join(fb, "fp").filter(F.col("id1") < F.col("id2"))
             .select("id1", "id2")
         )
-        jacc_pairs = shared_get((*_PAIR_KEY, sf_dir), spark)
-        if jacc_pairs is None:
-            jacc_pairs = shared_publish(
-                (*_PAIR_KEY, sf_dir), spark, _build_jaccard_pairs(spark, sf_dir)
-            )
+        jacc_pairs = _truth_pairs(spark, sf_dir)
         sim_pairs = D.simhash_pairs(
             docs, "doc_id", "text", max_hamming=3, sets=_doc_sets(spark, sf_dir)
         )
@@ -1571,11 +1560,7 @@ def neardup_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(n^2)); the two source lookups are doc_id equi-joins against a
     two-column projection of the corpus; the final rollup is at most
     |sources|^2 rows."""
-    pairs = shared_get((*_PAIR_KEY, sf_dir), spark)
-    if pairs is None:
-        pairs = shared_publish(
-            (*_PAIR_KEY, sf_dir), spark, _build_jaccard_pairs(spark, sf_dir)
-        )
+    pairs = _truth_pairs(spark, sf_dir)
     src = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     lab = (
         pairs.join(src.withColumnRenamed("doc_id", "id1"), "id1")
@@ -1670,11 +1655,7 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     empty-category average NULL identically on both sides. Scale shape:
     two doc_id equi-joins against a two-column split projection, then a
     3-row rollup — the pair table, not the corpus, is the driver."""
-    pairs = shared_get((*_PAIR_KEY, sf_dir), spark)
-    if pairs is None:
-        pairs = shared_publish(
-            (*_PAIR_KEY, sf_dir), spark, _build_jaccard_pairs(spark, sf_dir)
-        )
+    pairs = _truth_pairs(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     bucket = F.conv(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10
@@ -2264,11 +2245,7 @@ def neardup_clusters_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampled graph (same iterative min-label propagation as the full
     panel). See the section comment for why filtering pairs is exact and
     why components must be re-run."""
-    pairs = shared_get((*_PAIR_KEY, sf_dir), spark)
-    if pairs is None:
-        pairs = shared_publish(
-            (*_PAIR_KEY, sf_dir), spark, _build_jaccard_pairs(spark, sf_dir)
-        )
+    pairs = _truth_pairs(spark, sf_dir)
     comp = D.connected_components(_sample_pair_filter(pairs), "id1", "id2")
     sizes = comp.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("cluster_size")

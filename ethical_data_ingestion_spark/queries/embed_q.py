@@ -1011,7 +1011,7 @@ def _mmr_select(cands: DataFrame) -> DataFrame:
             .when(a["ckey"] > b["ckey"], 1)
             .otherwise(0),
         )
-        return F.element_at(best, 1)
+        return F.try_element_at(best, F.lit(1))
 
     grouped = (
         cands.select(
@@ -1354,16 +1354,10 @@ def _ann_scored(
 def _ann_scored_published(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The published rescored-candidate table, building and publishing on
     first need (so consumers stay standalone-safe)."""
-    from ..materialize import shared_get, shared_publish
-
-    hit = shared_get((*_ANN_SCORED_KEY, sf_dir), spark)
-    if hit is None:
-        base, b_buckets, planes = _chunk_lsh_buckets(spark, sf_dir)
-        hit = shared_publish(
-            (*_ANN_SCORED_KEY, sf_dir), spark,
-            _ann_scored(spark, sf_dir, base, b_buckets, planes),
-        )
-    return hit
+    return shared(
+        (*_ANN_SCORED_KEY, sf_dir), spark,
+        lambda: _ann_scored(spark, sf_dir, *_chunk_lsh_buckets(spark, sf_dir)),
+    )
 
 
 def _ann_rank_cut(scored: DataFrame) -> DataFrame:

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load_table
-from ..materialize import materialize, shared, unpin
+from ..materialize import materialize, shared, shared_value, unpin
 from ..registry import register
 
 _ITERS = 10
@@ -86,11 +86,6 @@ def _oracle_sql() -> str:
     """
 
 
-#: (sf_dir) -> (session, node count) — scalar twin of the shared graph
-#: artifact below; invalidated with the session exactly like ``shared``.
-_N_NODES: dict[str, tuple[object, int]] = {}
-
-
 def _trade_graph(spark: SparkSession, sf_dir: str):
     """Session-shared pinned edge⋈degree table plus its node count.
 
@@ -131,20 +126,13 @@ def _trade_graph(spark: SparkSession, sf_dir: str):
         )
 
     with_deg = shared(("trade_graph", sf_dir), spark, _build)
-    hit = _N_NODES.get(sf_dir)
-    if hit is None or hit[0] is not spark:
-        # mirror shared()'s eviction: a session change orphans EVERY
-        # cached count (each holds the dead SparkSession alive), not just
-        # the one for this sf_dir
-        for k in [k for k, v in _N_NODES.items() if v[0] is not spark]:
-            del _N_NODES[k]
-        # scalar only — never data rows; one distinct-count job per
-        # (session, corpus), amortized across every later call
-        _N_NODES[sf_dir] = (
-            spark,
-            with_deg.select("src").distinct().count(),
-        )
-    return with_deg, _N_NODES[sf_dir][1]
+    # one distinct-count job per (session, corpus), amortized across
+    # every later call
+    n_nodes = shared_value(
+        ("trade_graph_nodes", sf_dir), spark,
+        lambda: with_deg.select("src").distinct().count(),
+    )
+    return with_deg, n_nodes
 
 
 @register("pagerank_trade_graph", oracle=_oracle_sql())

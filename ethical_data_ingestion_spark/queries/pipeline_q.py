@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load_table
-from ..materialize import materialize, shared_get, shared_publish
+from ..materialize import materialize, shared, shared_get, shared_publish
 
 from ..registry import register
 
@@ -1082,13 +1082,10 @@ def _published_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays honest (r12, guide §2.4: don't recompute what the pipeline
     already persisted — the rebuild re-ran the full-corpus 8-gram
     decontamination semi-join per consumer)."""
-    hit = shared_get((*_DECISIONS_KEY, sf_dir), spark)
-    if hit is None:
-        hit = shared_publish(
-            (*_DECISIONS_KEY, sf_dir), spark,
-            _curation_decisions(spark, sf_dir),
-        )
-    return hit
+    return shared(
+        (*_DECISIONS_KEY, sf_dir), spark,
+        lambda: _curation_decisions(spark, sf_dir),
+    )
 
 
 def _curation_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:

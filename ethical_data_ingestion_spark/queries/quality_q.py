@@ -207,12 +207,6 @@ def _global_ranks(vals: DataFrame, *cols: str) -> tuple[DataFrame, int]:
     return ranked, acc
 
 
-#: one-slot count cache companion to the shared ranked-orders artifact —
-#: n is deterministic per sf_dir, so it survives an artifact release
-#: (a rebuilt pin ranks identically).
-_RANKED_N: dict[str, tuple[SparkSession, int]] = {}
-
-
 def _ranked_order_prices(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
     """(orders ranked globally by (o_totalprice, o_orderkey) with 0-based
     ``rn``, total count) — a ``materialize.shared`` session artifact:
@@ -228,7 +222,7 @@ def _ranked_order_prices(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, i
     (deciles need that for deterministic bucket membership); percentile
     rank-selection is unaffected because any stable order over equal
     values yields the same value at every rank."""
-    from ..materialize import shared
+    from ..materialize import shared, shared_value
 
     ranked = shared(
         ("ranked_orders", sf_dir),
@@ -241,11 +235,8 @@ def _ranked_order_prices(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, i
             "o_orderkey",
         )[0],
     )
-    hit = _RANKED_N.get(sf_dir)
-    if hit is None or hit[0] is not spark:
-        _RANKED_N.clear()
-        _RANKED_N[sf_dir] = (spark, ranked.count())
-    return ranked, _RANKED_N[sf_dir][1]
+    n = shared_value(("ranked_orders_n", sf_dir), spark, ranked.count)
+    return ranked, n
 
 
 @register(

@@ -102,14 +102,11 @@ def _drain_tumbling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _tumbling_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The published drained 1-hour window table, draining and publishing
     on first need (same shape as dedup_q._truth_pairs)."""
-    from ..materialize import shared_get, shared_publish
+    from ..materialize import shared
 
-    hit = shared_get((*_TUMB_KEY, sf_dir), spark)
-    if hit is None:
-        hit = shared_publish(
-            (*_TUMB_KEY, sf_dir), spark, _drain_tumbling_1h(spark, sf_dir)
-        )
-    return hit
+    return shared(
+        (*_TUMB_KEY, sf_dir), spark, lambda: _drain_tumbling_1h(spark, sf_dir)
+    )
 
 
 @register(
@@ -671,9 +668,8 @@ def _classify_perfp(
 ) -> DataFrame:
     """Classify a drained (fp, n_occ, first_doc_id) table against the
     static index and roll up per keeper source — shared by the streaming
-    drain and its batch twin (tools/streaming_decomp.py), so the
-    decomposition's two measurements differ ONLY in who maintained the
-    per-fingerprint aggregate."""
+    drain and the multiplexed ingest drain, so the two differ ONLY in who
+    maintained the per-fingerprint aggregate."""
     docs = load_table(spark, sf_dir, "documents")
     keeper_src = docs.select(
         F.col("doc_id").alias("first_doc_id"), "source"
@@ -923,8 +919,7 @@ def single_drain_quarantine_gate(
 
 def _quarantine_rollup(docs: DataFrame) -> DataFrame:
     """Per-source screen-flag rollup over a (doc_id, source, text) frame —
-    works identically on the micro-batched stream and its batch twin
-    (``tools/streaming_decomp.py``)."""
+    works identically on the micro-batched stream and a static batch."""
     from .text_q import _ENS_TAU, _pii_augmented_text, quality_z_df
     from ..operators import text as T
 
@@ -1122,74 +1117,6 @@ def streaming_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             output_mode="append",
         )
     return out.orderBy("window_start", "event_type")
-
-
-def _late_audit_batch_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of ``streaming_late_data_audit``: the engine's
-    watermark decisions re-derived as plain DataFrame arithmetic (file
-    assignment → per-batch watermark sequence → lagged drop filter →
-    final-flush emission) — consumed by ``tools/streaming_decomp.py`` to
-    price the engine premium and prove row-identity."""
-    from pyspark.sql import Window
-
-    ev = load_table(spark, sf_dir, "events")
-    b = F.broadcast(
-        ev.agg(F.min("ts").alias("mn"), F.max("ts").alias("mx"))
-    )
-    off = F.expr("timestampdiff(MICROSECOND, mn, ts)")
-    span = F.expr("timestampdiff(MICROSECOND, mn, mx)")
-    is_late = (F.col("event_id") % _LATE_MOD) == 0
-    tagged = (
-        ev.crossJoin(b)
-        .withColumn(
-            "f",
-            F.when(is_late, F.lit(3)).otherwise(
-                F.least(
-                    F.lit(2),
-                    F.floor((off * 3).cast("long") / (span + 1)).cast("int"),
-                )
-            ),
-        )
-        .withColumn(
-            "wend",
-            F.expr("date_trunc('hour', ts) + INTERVAL 1 HOUR"),
-        )
-    )
-    fmax = tagged.groupBy("f").agg(F.max("ts").alias("fmx"))
-    wmseq = fmax.withColumn(
-        "w",
-        F.expr(
-            f"max(fmx) OVER (ORDER BY f ROWS UNBOUNDED PRECEDING)"
-            f" - INTERVAL {_LATE_DELAY_MIN} MINUTES"
-        ),
-    )
-    thr = F.broadcast(
-        wmseq.withColumn("w2", F.lag("w", 2).over(Window.orderBy("f"))).select(
-            "f", "w", "w2"
-        )
-    )
-    finalw = F.broadcast(
-        wmseq.agg(F.max("w").alias("wf"))
-    )
-    kept = (
-        tagged.join(thr, "f")
-        .filter(F.col("w2").isNull() | (F.col("wend") > F.col("w2")))
-        .crossJoin(finalw)
-        .filter(F.col("wend") <= F.col("wf"))
-    )
-    return (
-        kept.groupBy(
-            F.expr("date_trunc('hour', ts)").alias("window_start"),
-            "event_type",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_value"),
-        )
-        .orderBy("window_start", "event_type")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1608,9 +1535,9 @@ def _curation_rollup(
     spark: SparkSession, sf_dir: str, docs: DataFrame
 ) -> DataFrame:
     """Per-source first-fail reason rollup over a (doc_id, source, text)
-    frame — works identically on the micro-batched stream and its batch
-    twin (``tools/streaming_decomp.py``); the static artifacts (fp index,
-    Bloom bitmap) come from the corpus, never from the frame."""
+    frame — works identically on the micro-batched stream and a static
+    batch; the static artifacts (fp index, Bloom bitmap) come from the
+    corpus, never from the frame."""
     from ..operators import text as T
     from .corpus_q import _BENCH_SOURCE, _DECON_K
     from .text_q import _ENS_TAU, quality_z_df
@@ -1672,15 +1599,14 @@ def _curation_final(out: DataFrame) -> DataFrame:
 # Round 10 (round-9 verdict item 8): MULTIPLEX the ingest-side drains.
 # streaming_incremental_dedup, streaming_quarantine_gate, and
 # streaming_curation_gate all drain the SAME spooled delta-document
-# stream, each paying its own trigger/state/file-listing premium (the
-# decomposition harness measured ~17s aggregate premium across the drain
-# family for sub-second batch semantics). A deployment serves all three
+# stream, each paying its own trigger/state/file-listing premium
+# (measured at ~17s aggregate across the drain family, against
+# sub-second batch equivalents). A deployment serves all three
 # panels from ONE stream pass: a single foreachBatch drain pins each
 # micro-batch, and the three rollups — all survivor-independent
 # aggregations, so batch boundaries cannot change them — run over the
 # union. Outputs are row-identical to the three registered single drains
-# (pinned by tests/test_streaming_multiplex.py and priced by
-# tools/streaming_decomp.py --multiplex).
+# (pinned by tests/test_streaming_multiplex.py).
 
 
 def multiplexed_ingest_drains(
@@ -1737,8 +1663,7 @@ def multiplexed_ingest_drains(
 # batch-side), and the three panels read off them. Windowed counts are
 # survivor-independent — batch boundaries cannot change a window's total
 # — so every panel is row-identical to its single-drain twin (pinned by
-# tests/test_streaming_multiplex.py, priced by
-# tools/streaming_decomp.py --multiplex).
+# tests/test_streaming_multiplex.py).
 
 
 def multiplexed_window_drains(

@@ -56,12 +56,14 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the session.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32) so
-    the same code path serves tests, bench, and the driver harness.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default the
+    host's CPU count) so the same code path serves tests, bench, and the
+    entry points. Shuffle partitions default to the same count.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    ncpu = os.cpu_count() or 1
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(ncpu)
     master = master or f"local[{cpus}]"
-    shuffle = shuffle_partitions or int(cpus) if str(cpus).isdigit() else 32
+    shuffle = shuffle_partitions or (int(cpus) if cpus.isdigit() else ncpu)
 
     builder = (
         SparkSession.builder.appName(app_name)

@@ -183,8 +183,12 @@ def run_available_now(
     spark = sdf.sparkSession
     # detach the result from the memory sink (checkpoint = one stable
     # copy in block storage) and drop the sink view, so repeated drains
-    # in one session don't accumulate sink tables
-    out = materialize(spark.table(name))
+    # in one session don't accumulate sink tables. The sink's MemoryPlan
+    # cannot be re-instanced, so a self-join over it fails analysis
+    # unless its columns are re-aliased first; a ``local`` pin hides that
+    # behind a fresh LogicalRDD, but a ``disk`` pin keeps the plan.
+    sink = spark.table(name)
+    out = materialize(sink.toDF(*sink.columns))
     spark.catalog.dropTempView(name)
     return out
 

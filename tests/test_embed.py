@@ -137,6 +137,31 @@ def test_packed_ckey_guard_fails_loudly(spark):
     assert "keyspace" in str(exc.value)
 
 
+def test_mmr_pool_smaller_than_pick_count(spark):
+    """A query with fewer candidates than MMR picks gets one pick per
+    candidate: an exhausted round's argmax over the empty remainder is
+    NULL and dropped, not an ANSI out-of-bounds error."""
+    from ethical_data_ingestion_spark.queries import embed_q as EQ
+
+    mul = EQ._CHUNK_KEYMUL
+    cands = spark.createDataFrame(
+        [(5, 3 * mul, [1.0, 0.0], 1.0, 0.9),
+         (5, 4 * mul + 1, [0.6, 0.8], 1.0, 0.7)],
+        "query_id bigint, ckey bigint, embedding array<float>, n2 double, "
+        "rel double",
+    )
+    assert cands.count() < EQ._MMR_K
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        rows = EQ._mmr_select(cands).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert [(r.query_id, r.doc_id, r.chunk_idx, r.mmr_rank) for r in rows] == [
+        (5, 3, 0, 1), (5, 4, 1, 2)
+    ]
+
+
 def test_mmr_matches_python_greedy(spark):
     """Replay greedy MMR in plain Python over the same candidate pool and
     pairwise sims (third implementation next to the Spark rounds and the

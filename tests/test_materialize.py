@@ -5,10 +5,12 @@ still produce identical results."""
 from __future__ import annotations
 
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
+from ethical_data_ingestion_spark import registry
 from ethical_data_ingestion_spark.io import load_table
 from ethical_data_ingestion_spark.materialize import (
     _SHARED,
@@ -16,12 +18,43 @@ from ethical_data_ingestion_spark.materialize import (
     shared,
     shared_get,
     shared_publish,
+    shared_release,
+    shared_value,
+    transient_release,
 )
 from ethical_data_ingestion_spark.operators import dedup
 
+#: registered queries over store artifacts: a publish-once pair table
+#: feeding connected components, and a shared streaming drain
+_STORE_QUERIES = ("neardup_clusters", "streaming_anomaly_windows")
+
+
+def _query_rows(spark, sf_dir, monkeypatch, mode):
+    """Rows of each store-backed query run under ``mode`` from an empty
+    store. Keys do not embed the mode, so the store is released (under
+    the mode that pinned it) before and after."""
+    shared_release(spark)
+    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", mode)
+    try:
+        return {
+            name: Counter(tuple(r) for r in
+                          registry.QUERIES[name](spark, sf_dir).collect())
+            for name in _STORE_QUERIES
+        }
+    finally:
+        shared_release(spark)
+        monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "local")
+
+
+@pytest.fixture(scope="module")
+def local_query_rows(spark, sf_dir):
+    with pytest.MonkeyPatch.context() as mp:
+        return _query_rows(spark, sf_dir, mp, "local")
+
 
 @pytest.mark.parametrize("mode", ["local", "disk", "checkpoint"])
-def test_modes_produce_identical_results(spark, sf_dir, mode, monkeypatch):
+def test_modes_produce_identical_results(spark, sf_dir, mode, monkeypatch,
+                                         request):
     monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", mode)
     docs = load_table(spark, sf_dir, "documents")
     out = dedup.jaccard_pairs(docs, "doc_id", "text", k=3, threshold=0.8)
@@ -29,6 +62,11 @@ def test_modes_produce_identical_results(spark, sf_dir, mode, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "local")
     base = dedup.jaccard_pairs(docs, "doc_id", "text", k=3, threshold=0.8)
     assert rows == {(r.id1, r.id2, r.jaccard) for r in base.collect()}
+    if mode != "local":
+        want = request.getfixturevalue("local_query_rows")
+        got = _query_rows(spark, sf_dir, monkeypatch, mode)
+        assert all(want.values())  # non-vacuous
+        assert got == want
 
 
 def test_explicit_mode_overrides_env(spark, monkeypatch):
@@ -68,14 +106,13 @@ def test_shared_publish_and_get(spark):
     assert shared_get(key, spark) is None
     pinned = shared_publish(key, spark, spark.range(3))
     assert shared_get(key, spark) is pinned
-    # a DIFFERENT session object invalidates (pinned blocks die with it)
-    assert shared_get(key, object()) is None
-    _SHARED.pop(key, None)
+    shared_release(spark, lambda k: k == key)
 
 
 def test_stale_session_entries_evicted_from_shared():
     """_SHARED must not keep a dead session's object graph alive: a miss
-    under a new 'session' object evicts every stale entry."""
+    under a new 'session' object evicts every stale entry, whichever
+    accessor misses."""
 
     class _FakeDF:
         pass
@@ -84,12 +121,17 @@ def test_stale_session_entries_evicted_from_shared():
         pass
 
     s_old, s_new = _FakeSession(), _FakeSession()
+    saved = dict(_SHARED)
     _SHARED.clear()
-    _SHARED[("k1",)] = (s_old, _FakeDF())
-    _SHARED[("k2",)] = (s_old, _FakeDF())
+    _SHARED[("k1",)] = (s_old, _FakeDF(), ())
+    _SHARED[("k2",)] = (s_old, _FakeDF(), ())
     assert shared_get(("k1",), s_new) is None
-    assert ("k1",) not in _SHARED  # evicted on the miss
-    # shared() with a new session evicts remaining stale keys too
+    assert not _SHARED  # every stale entry evicted on the miss
+    _SHARED[("k2",)] = (s_old, _FakeDF(), ())
+    assert shared_value(("n",), s_new, lambda: 7) == 7
+    assert shared_value(("n",), s_new, lambda: 8) == 7  # cached
+    assert ("k2",) not in _SHARED
+    _SHARED[("k2",)] = (s_old, _FakeDF(), ())
     built = _FakeDF()
     import ethical_data_ingestion_spark.materialize as M
 
@@ -102,6 +144,7 @@ def test_stale_session_entries_evicted_from_shared():
     assert out is built
     assert ("k2",) not in _SHARED
     _SHARED.clear()
+    _SHARED.update(saved)
 
 
 def test_disk_mode_iterative_loop_keeps_bounded_pinned_state(
@@ -138,21 +181,34 @@ def _storage_ids(spark):
 
 def test_release_frees_pinned_blocks(spark):
     """persistentRdds holds STRONG refs — del + GC never frees a local
-    pin (measured); release() must unpersist its tracked RDD ids."""
-    from ethical_data_ingestion_spark.materialize import release
-
+    pin (measured); shared_release must unpersist the ids the artifact's
+    own pin registered."""
+    key = ("relfree", "t")
     before = _storage_ids(spark)
-    pinned = materialize(spark.range(1000).withColumn("x", F.col("id") * 2))
+    shared(key, spark, lambda: spark.range(1000).withColumn("x", F.col("id") * 2))
     new = _storage_ids(spark) - before
     assert new, "local pin should register a persistent RDD"
-    assert release(pinned) == len(new)
+    assert set(_SHARED[key][2]) == new
+    assert shared_release(spark, lambda k: k == key) == 1
     assert not (_storage_ids(spark) & new)
-    assert release(pinned) == 0  # idempotent
+    assert shared_release(spark, lambda k: k == key) == 0  # idempotent
+
+
+def test_disk_shared_release_leaves_no_persistent_rdd(spark, monkeypatch):
+    """Under ``disk`` a released artifact drops its CacheManager entry
+    and its DISK_ONLY RDD, like a local pin drops its blocks."""
+    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "disk")
+    key = ("diskrel", "t")
+    before = _storage_ids(spark)
+    pinned = shared(key, spark, lambda: spark.range(40).withColumn("y", F.col("id") + 1))
+    assert pinned.storageLevel.useDisk
+    assert _storage_ids(spark) - before
+    assert shared_release(spark, lambda k: k == key) == 1
+    assert not (_storage_ids(spark) - before)
+    assert not pinned.storageLevel.useDisk  # plan uncached
 
 
 def test_shared_release_evicts_and_rebuilds(spark):
-    from ethical_data_ingestion_spark.materialize import shared_release
-
     builds = []
 
     def build():
@@ -173,14 +229,10 @@ def test_shared_release_evicts_and_rebuilds(spark):
 
 def test_transient_release_spares_shared_artifacts(spark):
     """Per-call pins are freed; store-owned artifacts keep their blocks
-    AND stay usable."""
-    from ethical_data_ingestion_spark.materialize import (
-        shared_release,
-        transient_release,
-    )
-
+    AND stay usable; a cached scalar never disables the sweep."""
     key = ("transpec", "t")
     owned = shared(key, spark, lambda: spark.range(25))
+    assert shared_value(("transpec", "n"), spark, owned.count) == 25
     transient = materialize(spark.range(75))
     assert transient.count() == 75
     freed = transient_release(spark)
