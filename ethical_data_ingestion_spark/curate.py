@@ -45,10 +45,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_MERKLE_SUBS = 256  # sub-buckets per shard hash chain (same two-level
-                    # discipline as queries/pipeline_q.shard_merkle_manifest)
-
-
 def _mount_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(shard_id, doc_id, source, text, n_tok): the rows the mount
     writes — curation-kept docs, span-deduped text, manifest-exact shard
@@ -80,55 +76,21 @@ def _mount_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _mount_merkle(corpus: DataFrame) -> DataFrame:
     """(shard, n_docs, n_bytes, shard_hash, root_hash) over the mount
-    rows, keyed by TRAINING shard id: two-level chained md5 (sorted row
-    hashes per sub-bucket, sub-hashes chained in bucket order, shard
-    hashes chained in shard order) — same discipline as
-    ``shard_merkle_manifest``, recomputable from the written corpus
-    alone (the read-back test does exactly that)."""
-    rows_h = corpus.select(
-        F.col("shard_id").alias("shard"),
-        (F.col("doc_id") % _MERKLE_SUBS).alias("sub"),
-        # octet_length: n_bytes is UTF-8 BYTES (release-card size
-        # accounting), not characters — they differ on non-ASCII corpora.
-        F.octet_length("text").cast("long").alias("nb"),
-        F.md5(
-            F.concat(F.col("doc_id").cast("string"), F.lit(":"), F.col("text"))
-        ).alias("rh"),
-    )
-    lvl0 = rows_h.groupBy("shard", "sub").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("nb").cast("long").alias("nb"),
-        F.md5(F.concat_ws("", F.array_sort(F.collect_list("rh")))).alias("sub_h"),
-    )
-    lvl1 = lvl0.groupBy("shard").agg(
-        F.sum("n").cast("long").alias("n_docs"),
-        F.sum("nb").cast("long").alias("n_bytes"),
-        F.md5(
-            F.concat_ws(
-                "",
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("sub", "sub_h"))),
-                    lambda x: x["sub_h"],
-                ),
-            )
-        ).alias("shard_hash"),
-    )
-    root = F.broadcast(
-        lvl1.agg(
-            F.md5(
-                F.concat_ws(
-                    "",
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(F.struct("shard", "shard_hash"))
-                        ),
-                        lambda x: x["shard_hash"],
-                    ),
-                )
-            ).alias("root_hash")
+    rows, keyed by TRAINING shard id: the two-level chain of
+    ``shard_merkle_manifest`` (``pipeline_q._merkle_chain``), recomputable
+    from the written corpus alone (the read-back test does exactly that)."""
+    from .queries.pipeline_q import _merkle_chain
+
+    return _merkle_chain(
+        corpus.select(
+            F.col("shard_id").alias("shard"),
+            "doc_id",
+            "text",
+            # octet_length: n_bytes is UTF-8 BYTES (release-card size
+            # accounting), not characters — they differ on non-ASCII corpora.
+            F.octet_length("text").cast("long").alias("nb"),
         )
     )
-    return lvl1.crossJoin(root).orderBy("shard")
 
 
 def write_training_mount(

@@ -39,9 +39,7 @@ def preresolve_tables(spark: SparkSession, sf_dir: str) -> None:
     """Resolve every fixture table once as a temp view and route later
     ``load_table`` calls through it (harness-level warmup — callers that
     never preresolve are unaffected)."""
-    from .schemas import FIXTURE_TABLES as _TABLES
-
-    for name in _TABLES:
+    for name in FIXTURE_TABLES:
         _VIEW_REGISTRY.pop((sf_dir, name), None)
         df = load_table(spark, sf_dir, name)
         # stable per-(sf_dir, table) view name: re-invocation REPLACES the
@@ -139,21 +137,6 @@ def column_max_from_footers(sf_dir: str, name: str, col: str):
                         return None
                     best = st.max if best is None else max(best, st.max)
     return best
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """All fixture tables, keyed by name."""
-    return {name: load_table(spark, sf_dir, name) for name in FIXTURE_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for ``spark.sql`` paths.
-
-    Mirrors the DuckDB oracle's pre-registered views so the same SQL text
-    can run on both engines.
-    """
-    for name in FIXTURE_TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 def read_evolving(spark: SparkSession, path: str) -> DataFrame:

@@ -276,27 +276,6 @@ def _minhash_from_sets(sets: DataFrame, id_col: str, num_hashes: int) -> DataFra
     )
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, num_hashes: int = 16, k: int = 3
-) -> DataFrame:
-    """MinHash signatures, relational form: explode shingles to rows, hash
-    each shingle once (md5 — uniform and, unlike xxhash64, reproducible in
-    DuckDB), derive ``num_hashes`` Carter-Wegman permutations from its two
-    32-bit halves, then min-aggregate per document.
-
-    This shape beats an array-fold signature: the hashing runs once per
-    shingle inside whole-stage codegen over flat rows, and the min-agg
-    combines map-side — one narrow shuffle on ``id_col``. (The fold
-    version re-evaluated the shingle pipeline per band via Catalyst
-    projection collapse: ~30× slower measured at sf0.01.)
-
-    Returns ``id_col, h0..h{n-1}`` (uint32-valued longs).
-    """
-    return _minhash_from_sets(
-        _shingle_sets(df, id_col, text_col, k), id_col, num_hashes
-    )
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,

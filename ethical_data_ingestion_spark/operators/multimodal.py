@@ -6,15 +6,14 @@ plumbing (``ethical_crawler.py:20-30``, ``file_format`` values at
 ``:402,552,661,743``). This module realizes the multimodal half of that
 surface Spark-first: image/audio/video payloads are opaque ``binary``
 columns with typed metadata, and all per-asset compute (frame sampling,
-byte-level features, decode) runs as Arrow-batched ``mapInPandas`` over
+byte-level features) runs as Arrow-batched ``mapInPandas`` over
 whatever partitioning the asset table already has — no shuffle is ever
 introduced by these operators, so they scale linearly with executors at
 100 TB.
 
-Codec reality: this container has no image/audio libraries, so the *decode*
-step is stubbed (``decode_image`` raises ``NotImplementedError`` unless PIL
-is importable). Everything around it — schemas, batch iteration, UDF
-signatures, frame chunking, feature vectors — operates on the real bytes.
+Codec-free by design: no image/audio decoder is used. Schemas, batch
+iteration, UDF signatures, frame chunking and feature vectors all operate
+on the raw bytes; :func:`byte_features` is the featurization path.
 """
 
 from __future__ import annotations
@@ -151,40 +150,6 @@ def byte_features(assets: DataFrame, bins: int = HIST_BINS) -> DataFrame:
 
     return assets.select("asset_id", "modality", "content").mapInPandas(
         featurize, schema=FEATURE_SCHEMA
-    )
-
-
-def decode_image(assets: DataFrame, target_size: tuple[int, int] = (64, 64)):
-    """Decode + resize image payloads → pixel tensors.
-
-    STUB: real decoding needs an image codec (PIL/opencv), which this
-    container does not ship. If PIL is importable the real path runs;
-    otherwise this raises ``NotImplementedError`` *at call time* (not at
-    import), so the rest of the module stays usable. The Spark-side design
-    is what matters: ``mapInPandas`` with binary in / ``array<double>`` out,
-    identical to :func:`byte_features`.
-    """
-    try:
-        from PIL import Image  # noqa: F401
-    except ImportError as exc:
-        raise NotImplementedError(
-            "image decode requires PIL/opencv, not available in this "
-            "container; byte_features() provides the codec-free path"
-        ) from exc
-
-    import io as _io
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for aid, content in zip(pdf["asset_id"], pdf["content"]):
-                img = Image.open(_io.BytesIO(bytes(content))).resize(target_size)
-                pixels = [float(p) for p in img.convert("L").getdata()]
-                out.append((aid, pixels))
-            yield pd.DataFrame(out, columns=["asset_id", "pixels"])
-
-    return assets.select("asset_id", "content").mapInPandas(
-        decode, schema="asset_id bigint, pixels array<double>"
     )
 
 

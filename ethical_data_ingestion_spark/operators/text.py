@@ -66,20 +66,6 @@ def avg_token_len(col: str | Column) -> Column:
     return F.round(non_space.cast("double") / n_tokens(col).cast("double"), 6)
 
 
-def quality_score(col: str | Column, stopwords: list[str]) -> Column:
-    """Composite [0,1] quality score: rewards stopword presence (natural
-    language) and mid-range token length. Deterministic closed form so the
-    oracle can reproduce it exactly:
-
-        0.5 * min(1, 5 * stopword_ratio) + 0.5 * (1 / (1 + |avg_len - 5|))
-    """
-    swr = stopword_ratio(col, stopwords)
-    alen = avg_token_len(col)
-    return F.round(
-        0.5 * F.least(F.lit(1.0), 5.0 * swr) + 0.5 / (1.0 + F.abs(alen - 5.0)), 6
-    )
-
-
 def lang_guess(col: str | Column) -> Column:
     """Stopword-vote language ID. Scores each language by stopword hits;
     argmax with ties toward the LANG_STOPWORDS order; 'und' (undetermined)

@@ -771,17 +771,34 @@ def shard_merkle_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays bounded instead of concatenating a whole shard's hashes in one
     task. The root fan-in is a 16-row broadcast."""
     docs = load_table(spark, sf_dir, "documents")
-    rows_h = docs.select(
-        (F.col("doc_id") % _MERKLE_SHARDS).alias("shard"),
+    return _merkle_chain(
+        docs.select(
+            (F.col("doc_id") % _MERKLE_SHARDS).alias("shard"),
+            "doc_id",
+            "text",
+            F.col("n_chars").alias("nb"),
+        )
+    )
+
+
+def _merkle_chain(rows: DataFrame) -> DataFrame:
+    """(shard, n_docs, n_bytes, shard_hash, root_hash) from (shard, doc_id,
+    text, nb) rows: row hash md5(doc_id:text), sorted row hashes chained
+    per sub-bucket (doc_id mod ``_MERKLE_SUBS``), sub-hashes chained in
+    bucket order per shard, shard hashes chained in shard order into one
+    root. Shared by ``shard_merkle_manifest`` and the curate mount's
+    ``<out>/merkle``."""
+    rows_h = rows.select(
+        "shard",
         (F.col("doc_id") % _MERKLE_SUBS).alias("sub"),
-        "n_chars",
+        "nb",
         F.md5(
             F.concat(F.col("doc_id").cast("string"), F.lit(":"), F.col("text"))
         ).alias("rh"),
     )
     lvl0 = rows_h.groupBy("shard", "sub").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("n_chars").cast("long").alias("nb"),
+        F.sum("nb").cast("long").alias("nb"),
         F.md5(F.concat_ws("", F.array_sort(F.collect_list("rh")))).alias(
             "sub_h"
         ),

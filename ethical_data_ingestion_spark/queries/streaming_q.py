@@ -215,30 +215,6 @@ def streaming_sessions_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _guard_sessions(sess, spark, sf_dir)
 
 
-def streaming_sessions_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME session semantics on Spark 4's
-    ``transformWithStateInPandas`` (the successor to
-    ``applyInPandasWithState``): typed ValueState + explicit event-time
-    timers instead of the per-group timeout mode. Third implementation
-    against the identical oracle — the panel prices all three APIs
-    (legacy custom state / new custom state / built-in session_window)
-    on the same drain. Registered only when the runtime supports the API
-    (``has_tws_support`` — needs protobuf, absent in this container);
-    ``sessionize_tws`` itself raises with the remedy either way."""
-    with P.state_partitions(spark, 24):
-        stream = _spooled_stream(spark, sf_dir, n_files=4, mfpt=None)
-        sess = P.run_available_now(
-            P.sessionize_tws(stream, _SESSION_GAP_S), name=None
-        )
-    return _guard_sessions(sess, spark, sf_dir)
-
-
-if P.has_tws_support():  # pragma: no cover — protobuf absent here
-    register("streaming_sessions_tws", oracle=_SESSIONS_ORACLE)(
-        streaming_sessions_tws
-    )
-
-
 @register("streaming_sessions_jvm", oracle=_SESSIONS_ORACLE)
 def streaming_sessions_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME session semantics as ``streaming_sessions_stateful``, via
@@ -476,7 +452,7 @@ def single_drain_anomaly_windows(
 
 def _anomaly_screen(win: DataFrame) -> DataFrame:
     """The z-score screen over a drained (window_start, event_type, n)
-    table — shared by the single drain and the multiplexed pass so their
+    table — shared by the registered panel and the single drain so their
     rows are identical by construction."""
     cnt = F.count(F.lit(1)).cast("double")
     mean = F.sum("n").cast("double") / cnt
@@ -534,9 +510,8 @@ def _doc_batch_stream(spark: SparkSession, sf_dir: str, mfpt: int | None) -> Dat
 
 def _drain_rows(spark: SparkSession, stream: DataFrame, ckpt_prefix: str) -> DataFrame:
     """ONE foreachBatch pass that drains ``stream`` and returns the pinned
-    union of its micro-batches — the front half of the r10/r11 multiplex
-    functions, factored out so it can also back the session-shared drained-
-    rows artifacts below."""
+    union of its micro-batches; backs the session-shared drained-rows
+    artifacts below."""
     from ..materialize import materialize
 
     batches: list[DataFrame] = []
@@ -560,11 +535,10 @@ def _drain_rows(spark: SparkSession, stream: DataFrame, ckpt_prefix: str) -> Dat
 
 
 def _drained_doc_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-shared drained delta-document rows: the SAME single ingest
-    stream pass ``multiplexed_ingest_drains`` documents (one file-source
-    listing, one trigger sequence, one checkpoint) published as a pinned
-    artifact, so the ingest panels whose rollups are survivor-independent
-    batch aggregations stop paying a drain each (r12 verdict item 2 —
+    """Session-shared drained delta-document rows: ONE ingest stream pass
+    (one file-source listing, one trigger sequence, one checkpoint)
+    published as a pinned artifact, so the ingest panels whose rollups
+    are survivor-independent batch aggregations stop paying a drain each (r12 verdict item 2 —
     guide §2.4/§2.6). Batch boundaries cannot change any consumer panel
     (pinned by tests/test_streaming_multiplex.py against the real
     single-drain twins)."""
@@ -660,16 +634,7 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         perfp = P.run_available_now(agg, output_mode="complete")
 
-    return _classify_perfp(spark, sf_dir, perfp)
-
-
-def _classify_perfp(
-    spark: SparkSession, sf_dir: str, perfp: DataFrame
-) -> DataFrame:
-    """Classify a drained (fp, n_occ, first_doc_id) table against the
-    static index and roll up per keeper source — shared by the streaming
-    drain and the multiplexed ingest drain, so the two differ ONLY in who
-    maintained the per-fingerprint aggregate."""
+    # classify the drained table against the static index, per keeper source
     docs = load_table(spark, sf_dir, "documents")
     keeper_src = docs.select(
         F.col("doc_id").alias("first_doc_id"), "source"
@@ -735,20 +700,14 @@ def streaming_topk_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r13 (guide §2.4/§2.6): served from the session-shared drained events
     pass (``_drained_event_rows``) with the sliding window computed
-    batch-side over the pinned rows — exactly the
-    ``multiplexed_window_drains`` slide path, whose row-identity to the
-    dedicated drain (``single_drain_topk_trending``) windowed counts are
-    survivor-independent guarantees and tests pin."""
-    win = _slide_2h_1h(_drained_event_rows(spark, sf_dir))
-    return _topk_screen(win)
-
-
-def _slide_2h_1h(rows: DataFrame) -> DataFrame:
-    """Batch 2-hour/1-hour-slide per-type counts over drained event rows
-    (``F.window`` is the same TimeWindow operator batch-side) — shared by
-    the registered panel and the multiplex."""
-    wm = rows.withColumn("ts", P.as_instant("ts"))
-    return (
+    batch-side over the pinned rows (``F.window`` is the same TimeWindow
+    operator batch-side); windowed counts are survivor-independent, so
+    the panel is row-identical to the dedicated drain
+    (``single_drain_topk_trending``), which tests pin."""
+    wm = _drained_event_rows(spark, sf_dir).withColumn(
+        "ts", P.as_instant("ts")
+    )
+    win = (
         wm.groupBy(F.window("ts", "2 hours", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
@@ -757,12 +716,12 @@ def _slide_2h_1h(rows: DataFrame) -> DataFrame:
             "n_events",
         )
     )
+    return _topk_screen(win)
 
 
 def _drained_event_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-shared drained event rows: one foreachBatch pass over the
-    spooled events stream (the ``multiplexed_window_drains`` front half)
-    published as a pinned artifact."""
+    spooled events stream, published as a pinned artifact."""
     from ..materialize import shared
 
     def _build() -> DataFrame:
@@ -797,8 +756,8 @@ def single_drain_topk_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _topk_screen(win: DataFrame) -> DataFrame:
     """Top-2-per-window rank screen over a drained (window_start,
-    event_type, n_events) table — shared by the single drain and the
-    multiplexed pass."""
+    event_type, n_events) table — shared by the registered panel and the
+    single drain."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("window_start").orderBy(
@@ -893,7 +852,7 @@ def streaming_quarantine_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r13 (guide §2.4/§2.6): served from the session-shared drained ingest
     pass (``_drained_doc_rows`` — ONE stream drain for the whole ingest
-    panel family, the ``multiplexed_ingest_drains`` deployment shape);
+    panel family);
     the rollup itself is survivor-independent, so the panel is
     row-identical to the dedicated engine drain, which lives on as
     ``single_drain_quarantine_gate`` and stays pinned against this panel
@@ -909,7 +868,7 @@ def single_drain_quarantine_gate(
 ) -> DataFrame:
     """The dedicated engine drain (state held across micro-batches) —
     the pre-r13 registered body, kept as the equivalence twin the
-    multiplex/shared-artifact tests pin against."""
+    shared-artifact tests pin against."""
     with P.state_partitions(spark, 4):
         stream = _doc_batch_stream(spark, sf_dir, mfpt=2)
         agg = _quarantine_rollup(stream)
@@ -1523,7 +1482,7 @@ def streaming_curation_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def single_drain_curation_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dedicated engine drain (per-source reason counts held in state
     across micro-batches) — the pre-r13 registered body, kept as the
-    equivalence twin the multiplex/shared-artifact tests pin against."""
+    equivalence twin the shared-artifact tests pin against."""
     with P.state_partitions(spark, 4):
         stream = _doc_batch_stream(spark, sf_dir, mfpt=2)
         agg = _curation_rollup(spark, sf_dir, stream)
@@ -1593,116 +1552,3 @@ def _curation_final(out: DataFrame) -> DataFrame:
             F.col("n_kept").cast("double") / F.col("n_docs").cast("double"), 4
         ).alias("kept_rate"),
     ).orderBy("source")
-
-
-# ---------------------------------------------------------------------------
-# Round 10 (round-9 verdict item 8): MULTIPLEX the ingest-side drains.
-# streaming_incremental_dedup, streaming_quarantine_gate, and
-# streaming_curation_gate all drain the SAME spooled delta-document
-# stream, each paying its own trigger/state/file-listing premium
-# (measured at ~17s aggregate across the drain family, against
-# sub-second batch equivalents). A deployment serves all three
-# panels from ONE stream pass: a single foreachBatch drain pins each
-# micro-batch, and the three rollups — all survivor-independent
-# aggregations, so batch boundaries cannot change them — run over the
-# union. Outputs are row-identical to the three registered single drains
-# (pinned by tests/test_streaming_multiplex.py).
-
-
-def multiplexed_ingest_drains(
-    spark: SparkSession, sf_dir: str
-) -> dict[str, DataFrame]:
-    """One streaming pass over the delta-document spool serving the three
-    ingest panels. Returns {registered-query-name: DataFrame} with each
-    panel row-identical to its single-drain twin.
-
-    Scale shape: the stream is read ONCE (one file-source listing, one
-    trigger sequence, one checkpoint); per micro-batch the only work is
-    pinning the batch rows (localCheckpoint — blocks stay on executors);
-    the three rollups then run as batch aggregations over the union,
-    sharing the scan. State that the single drains kept in the engine
-    store (per-fp counts, per-source counters) becomes one post-drain
-    groupBy each — legal precisely because every panel is
-    survivor-independent."""
-    from ..materialize import materialize
-    from ..operators import text as T
-
-    with P.state_partitions(spark, 4):
-        rows = materialize(
-            _drain_rows(
-                spark, _doc_batch_stream(spark, sf_dir, mfpt=2), "eds_mux_ckpt_"
-            )
-        )
-    perfp = (
-        rows.select("doc_id", T.fingerprint("text").alias("fp"))
-        .groupBy("fp")
-        .agg(
-            F.count(F.lit(1)).alias("n_occ"),
-            F.min("doc_id").alias("first_doc_id"),
-        )
-    )
-    return {
-        "streaming_incremental_dedup": _classify_perfp(spark, sf_dir, perfp),
-        "streaming_quarantine_gate": _quarantine_final(
-            _quarantine_rollup(rows)
-        ),
-        "streaming_curation_gate": _curation_final(
-            _curation_rollup(spark, sf_dir, rows)
-        ),
-    }
-
-
-# ---------------------------------------------------------------------------
-# Round 11 (round-10 verdict item 6): MULTIPLEX the window-family drains.
-# streaming_tumbling_hourly, streaming_anomaly_windows, and
-# streaming_topk_trending all drain the SAME spooled events stream —
-# anomaly even maintains the IDENTICAL 1-hour tumbling table as
-# tumbling_hourly, and topk only differs in its window spec. One
-# foreachBatch pass pins the micro-batches; the two window tables are
-# then batch aggregations over the union (F.window is the same operator
-# batch-side), and the three panels read off them. Windowed counts are
-# survivor-independent — batch boundaries cannot change a window's total
-# — so every panel is row-identical to its single-drain twin (pinned by
-# tests/test_streaming_multiplex.py).
-
-
-def multiplexed_window_drains(
-    spark: SparkSession, sf_dir: str
-) -> dict[str, DataFrame]:
-    """One streaming pass over the events spool serving the three
-    window-family panels. Returns {registered-query-name: DataFrame},
-    each row-identical to its single-drain twin.
-
-    Scale shape: one file-source listing / trigger sequence / checkpoint
-    instead of three; per micro-batch the only work is pinning the rows;
-    the 1-hour tumbling table is computed ONCE and feeds both the raw
-    panel and the anomaly screen."""
-    from ..materialize import materialize
-    from ..operators import windows as W
-
-    with P.state_partitions(spark, 4):
-        rows = materialize(
-            _drain_rows(
-                spark,
-                _spooled_stream(spark, sf_dir, n_files=4, mfpt=2),
-                "eds_muxw_ckpt_",
-            )
-        )
-    wm = rows.withColumn("ts", P.as_instant("ts"))
-    tumb = materialize(
-        W.tumbling_agg(wm, "ts", "1 hour", ["event_type"]).withColumn(
-            "window_start", P.as_ntz("window_start")
-        )
-    )
-    slide = _slide_2h_1h(rows)
-    return {
-        "streaming_tumbling_hourly": tumb.orderBy(
-            "window_start", "event_type"
-        ),
-        "streaming_anomaly_windows": _anomaly_screen(
-            tumb.select(
-                "window_start", "event_type", F.col("n_events").alias("n")
-            )
-        ),
-        "streaming_topk_trending": _topk_screen(slide),
-    }

@@ -8,9 +8,9 @@ limits feeding row-at-a-time inserts (``ethical_crawler.py:293-302,
 * file-arrival source with ``maxFilesPerTrigger`` as the rate limiter
   (SURVEY #30 — backpressure by trigger, not sleep());
 * event-time watermarks bounding state (SURVEY #35, absent in reference);
-* windowed aggregates / streaming dedup / sessionization reusing the SAME
-  aggregation bodies as the batch twins in ``operators/windows.py`` — one
-  code shape, two execution modes;
+* windowed aggregates reusing the SAME aggregation bodies as the batch
+  twins in ``operators/windows.py`` — one code shape, two execution modes;
+* streaming dedup and a custom stateful sessionizer;
 * ``foreachBatch`` audit sink for the compliance-trail pattern (SURVEY #33).
 
 Scale: streaming state lives in the state store, partitioned by grouping
@@ -229,21 +229,6 @@ def dedup_stream(
     )
 
 
-def session_stream(
-    stream: DataFrame,
-    gap: str,
-    key: str = "user_id",
-    ts_col: str = "ts",
-    delay: str = "0 seconds",
-) -> DataFrame:
-    """Built-in ``session_window`` over a watermarked stream (merging
-    session state handled by Spark's session-window state store)."""
-    wm = stream.withColumn(ts_col, as_instant(ts_col)).withWatermark(ts_col, delay)
-    return W.session_agg(wm, ts_col, gap, key).withColumn(
-        "session_start", as_ntz("session_start")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Custom stateful operator: applyInPandasWithState sessionizer
 # ---------------------------------------------------------------------------
@@ -388,174 +373,6 @@ def sessionize_stateful(
             stateStructType=_STATE_DDL,
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def has_tws_support() -> bool:
-    """Whether ``transformWithStateInPandas`` can run here: its state
-    server speaks protobuf to the Python worker, so the ``protobuf``
-    package must be importable (pyspark does not hard-depend on it)."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def sessionize_tws(
-    stream: DataFrame,
-    gap_seconds: int,
-    key: str = "user_id",
-    ts_col: str = "ts",
-    delay: str = "0 seconds",
-) -> DataFrame:
-    """The SAME session semantics as :func:`sessionize_stateful`, on
-    Spark 4's ``transformWithStateInPandas`` — the successor API to
-    ``applyInPandasWithState`` (SPARK-49560): typed state variables
-    (``getValueState``) instead of one opaque tuple, explicit timers
-    (``registerTimer``/``handleExpiredTimer``) instead of a per-group
-    timeout mode, and a processor object whose ``init`` declares state
-    once. New pipelines should start here; the aIPWS twin documents the
-    migration path.
-
-    GATED on ``protobuf`` (same policy as the multimodal decode stub —
-    the dependency isn't in this container, the Spark-side plumbing is
-    real): raises ImportError with the remedy when absent; the
-    registered query twin only exists when the gate passes.
-
-    Same four-scalar state per key, same vectorized numpy sessionization
-    in the worker, same event-time timer at ``last + gap``."""
-    if not has_tws_support():
-        raise ImportError(
-            "transformWithStateInPandas needs the 'protobuf' package "
-            "(its state server speaks protobuf to the Python worker); "
-            "install protobuf or use sessionize_stateful on this "
-            "deployment"
-        )
-    gap_us = gap_seconds * _US
-    stream = stream.withColumn(ts_col, as_instant(ts_col)).withColumn(
-        "ts_us", F.unix_micros(F.col(ts_col))
-    )
-
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._sess = handle.getValueState("sess", _STATE_DDL)
-
-        def _emit(self, uid, starts, lasts, ns, totals):
-            import numpy as np
-
-            return pd.DataFrame(
-                {
-                    "user_id": np.full(len(starts), uid, dtype=np.int64),
-                    "session_start": np.asarray(starts, dtype=np.int64).astype(
-                        "datetime64[us]"
-                    ),
-                    "session_last": np.asarray(lasts, dtype=np.int64).astype(
-                        "datetime64[us]"
-                    ),
-                    "n_events": np.asarray(ns, dtype=np.int64),
-                    "total_value": np.round(
-                        np.asarray(totals, dtype=np.float64), 2
-                    ),
-                }
-            )
-
-        def handleInputRows(self, key_tuple, rows, timerValues):
-            import numpy as np
-
-            (uid,) = key_tuple
-            chunks = list(rows)
-            events = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
-            ts_arr = events["ts_us"].to_numpy(np.int64)
-            order = np.argsort(ts_arr, kind="stable")
-            ts = ts_arr[order]
-            vals = events["value"].to_numpy(np.float64)[order]
-            cur = self._sess.get() if self._sess.exists() else None
-            if cur is not None:
-                # drop the parked session's pending timer; it will be
-                # re-registered for the merged session's new close time
-                self._handle.deleteTimer(cur[1] // 1000 + gap_seconds * 1000)
-            c_start = None
-            if len(ts):
-                seg_starts = np.concatenate(
-                    ([0], np.flatnonzero(np.diff(ts) > gap_us) + 1)
-                )
-                seg_ends = np.concatenate((seg_starts[1:], [len(ts)]))
-                s_start = ts[seg_starts]
-                s_last = ts[seg_ends - 1]
-                s_n = (seg_ends - seg_starts).astype(np.int64)
-                s_total = np.add.reduceat(vals, seg_starts)
-                carried = None
-                if cur is not None and int(s_start[0]) - cur[1] <= gap_us:
-                    s_start[0] = cur[0]
-                    s_n[0] += cur[2]
-                    s_total[0] += cur[3]
-                elif cur is not None:
-                    carried = cur
-                c_start = s_start[:-1]
-                c_last = s_last[:-1]
-                c_n = s_n[:-1]
-                c_total = s_total[:-1]
-                if carried is not None:
-                    c_start = np.concatenate(([carried[0]], c_start))
-                    c_last = np.concatenate(([carried[1]], c_last))
-                    c_n = np.concatenate(([carried[2]], c_n))
-                    c_total = np.concatenate(([carried[3]], c_total))
-                cur = (
-                    int(s_start[-1]),
-                    int(s_last[-1]),
-                    int(s_n[-1]),
-                    float(s_total[-1]),
-                )
-            if cur is not None:
-                timeout_ms = cur[1] // 1000 + gap_seconds * 1000
-                if timeout_ms <= timerValues.getCurrentWatermarkInMs():
-                    # watermark already past the close time: emit now
-                    if c_start is None:
-                        c_start = np.array([cur[0]], dtype=np.int64)
-                        c_last = np.array([cur[1]], dtype=np.int64)
-                        c_n = np.array([cur[2]], dtype=np.int64)
-                        c_total = np.array([cur[3]], dtype=np.float64)
-                    else:
-                        c_start = np.concatenate((c_start, [cur[0]]))
-                        c_last = np.concatenate((c_last, [cur[1]]))
-                        c_n = np.concatenate((c_n, [cur[2]]))
-                        c_total = np.concatenate((c_total, [cur[3]]))
-                    self._sess.clear()
-                else:
-                    self._sess.update(cur)
-                    self._handle.registerTimer(timeout_ms)
-            if c_start is not None and len(c_start):
-                yield self._emit(uid, c_start, c_last, c_n, c_total)
-
-        def handleExpiredTimer(self, key_tuple, timerValues, expiredTimerInfo):
-            (uid,) = key_tuple
-            if self._sess.exists():
-                s, last, n, total = self._sess.get()
-                # only flush if THIS timer is the session's close timer
-                # (a stale timer for an already-merged session is a no-op)
-                if expiredTimerInfo.getExpiryTimeInMs() >= (
-                    last // 1000 + gap_seconds * 1000
-                ):
-                    self._sess.clear()
-                    yield self._emit(uid, [s], [last], [n], [total])
-
-        def close(self) -> None:
-            pass
-
-    return (
-        stream.withWatermark(ts_col, delay)
-        .groupBy(key)
-        .transformWithStateInPandas(
-            SessionProcessor(),
-            outputStructType=SESSION_OUT_DDL,
-            outputMode="append",
-            timeMode="eventTime",
         )
     )
 

@@ -10,7 +10,7 @@ import pytest
 
 from ethical_data_ingestion_spark import registry
 from ethical_data_ingestion_spark.cli import cmd_curate
-from ethical_data_ingestion_spark.curate import _MERKLE_SUBS
+from ethical_data_ingestion_spark.queries.pipeline_q import _MERKLE_SUBS
 
 SF_DIR = "/root/testdata/sf0.001"
 

@@ -72,18 +72,6 @@ def test_byte_features_entropy_extremes(spark):
     assert sum(out[2].features) == 0.0
 
 
-def test_decode_image_is_gated_stub(spark):
-    assets = _assets(spark, {0: "not-an-image"})
-    try:
-        import PIL  # noqa: F401
-
-        pytest.skip("PIL present; stub gate not exercised")
-    except ImportError:
-        pass
-    with pytest.raises(NotImplementedError, match="image decode"):
-        MM.decode_image(assets)
-
-
 def test_phash_exact_dups_are_hamming_zero(spark):
     """Identical payloads (same sha256) must pair at Hamming 0 — the
     pHash of equal bytes is equal; and every reported pair is within

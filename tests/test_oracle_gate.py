@@ -8,7 +8,10 @@ query fails CI here instead of hiding until the driver rotates onto it.
 
 Runs as a subprocess: oracle_check builds its own SparkSession with the
 production configs, exactly as the tool is used standalone — sharing the
-test-session Spark would change what is being verified.
+test-session Spark would change what is being verified. Its driver heap
+defaults to 4g instead of 8g: the test session's JVM is alive at the same
+time, and two 8g heaps do not fit a 16 GB host (the kernel OOM-killed the
+gate's JVM at 8.2 GB resident). sf0.001 needs far less.
 """
 
 from __future__ import annotations
@@ -30,6 +33,7 @@ def test_every_registered_query_passes_oracle_gate_at_sf0001():
         capture_output=True,
         text=True,
         cwd=_REPO,
+        env={"SPARK_GRAFT_DRIVER_MEM": "4g", **os.environ},
         timeout=900,
     )
     tail = proc.stdout[-4000:] + proc.stderr[-2000:]

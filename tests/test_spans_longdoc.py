@@ -11,18 +11,20 @@ corpus."""
 from __future__ import annotations
 
 import importlib.util
+import json
 import random
+import subprocess
+import sys
 from collections import defaultdict
+from pathlib import Path
 
-import duckdb
 import pytest
 
 from ethical_data_ingestion_spark import registry
 from ethical_data_ingestion_spark.queries import spans_q
 
-_spec = importlib.util.spec_from_file_location(
-    "oracle_check", "/root/repo/tools/oracle_check.py"
-)
+_ORACLE_CHECK = Path(__file__).resolve().parents[1] / "tools" / "oracle_check.py"
+_spec = importlib.util.spec_from_file_location("oracle_check", _ORACLE_CHECK)
 _oc = importlib.util.module_from_spec(_spec)
 _spec.loader.exec_module(_oc)
 value_hash = _oc.value_hash
@@ -84,22 +86,66 @@ def test_longdoc_family_matches_deep_oracles(spark, longdoc_dir):
         "substring_dedup_removal_stats": spans_q._removal_oracle(depth),
         "substring_dedup_emit": spans_q._emit_oracle(depth),
     }
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{longdoc_dir}/documents.parquet/*.parquet')"
-    )
-    for name, sql in oracles.items():
+    deep = _duckdb_oracles(longdoc_dir, oracles)
+    for name in oracles:
         sdf = registry.QUERIES[name](spark, longdoc_dir)
         scols = sdf.columns
         srows = [tuple(r) for r in sdf.collect()]
-        res = con.execute(sql)
-        ocols = [d[0] for d in res.description]
-        orows = [tuple(r) for r in res.fetchall()]
-        assert len(srows) == len(orows), name
+        ocols, n_orows, ohash = deep[name]
+        assert len(srows) == n_orows, name
         assert sorted(scols) == sorted(ocols), name
-        assert value_hash(scols, srows) == value_hash(ocols, orows), name
+        assert value_hash(scols, srows) == ohash, name
         assert srows, name  # non-vacuous: every panel has rows here
+
+
+#: Runs in a child process: DuckDB's depth-13 working set is returned to
+#: the OS when the child exits instead of staying in the test process.
+_ORACLE_CHILD = """
+import importlib.util, json, sys
+import duckdb
+job = json.load(sys.stdin)
+spec = importlib.util.spec_from_file_location("oracle_check", job["oc"])
+oc = importlib.util.module_from_spec(spec)
+spec.loader.exec_module(oc)
+con = duckdb.connect()
+con.execute("SET threads=1")
+con.execute("SET enable_progress_bar=false")
+con.execute(
+    "CREATE VIEW documents AS SELECT * FROM "
+    f"read_parquet('{job['dir']}/documents.parquet/*.parquet')"
+)
+out = {}
+for name, sql in job["oracles"].items():
+    res = con.execute(sql)
+    cols = [d[0] for d in res.description]
+    rows = [tuple(r) for r in res.fetchall()]
+    out[name] = [cols, len(rows), oc.value_hash(cols, rows)]
+json.dump(out, sys.stdout)
+"""
+
+
+def _duckdb_oracles(data_dir: str, oracles: dict[str, str]) -> dict:
+    """{name: (columns, row count, value_hash)} of each oracle, evaluated
+    by DuckDB (one thread) in a child process.
+
+    DuckDB 1.0 inlines every reference to a CTE. The removal-stats oracle
+    reaches ``lcp_pairs`` eight times (twice through ``ends``, times the
+    four ``starts`` branches), which peaks at 12.9 GB in 130 s on one
+    thread of a 4-core host. Marking the CTE MATERIALIZED evaluates it
+    once: 2.3 GB in 12 s. Materializing a CTE does not change its rows."""
+    sqls = {
+        name: sql.replace("lcp_pairs AS (", "lcp_pairs AS MATERIALIZED (")
+        for name, sql in oracles.items()
+    }
+    job = {"oc": str(_ORACLE_CHECK), "dir": data_dir, "oracles": sqls}
+    proc = subprocess.run(
+        [sys.executable, "-c", _ORACLE_CHILD],
+        input=json.dumps(job),
+        capture_output=True,
+        text=True,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    return json.loads(proc.stdout)
 
 
 def test_longdoc_planted_spans_detected(spark, longdoc_dir):

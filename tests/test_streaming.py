@@ -5,8 +5,6 @@ from __future__ import annotations
 
 import glob
 import os
-
-import pytest
 import tempfile
 
 from pyspark.sql import functions as F
@@ -140,33 +138,6 @@ def test_incremental_rollup_matches_batch_aggregate(spark, sf_dir, tmp_path):
     import glob, os
     days = glob.glob(os.path.join(out_dir, "day=*"))
     assert len(days) >= 25  # ~30 days of fixture events
-
-
-def test_tws_sessionizer_gate(spark, sf_dir):
-    """transformWithStateInPandas twin: runs (and matches the batch
-    sessions) when protobuf is present; raises the documented ImportError
-    with the remedy when absent. Either way the gate is explicit — the
-    registry only carries the query when the runtime supports it."""
-    from ethical_data_ingestion_spark.registry import QUERIES
-    from ethical_data_ingestion_spark.streaming import pipeline as P
-
-    if not P.has_tws_support():
-        assert "streaming_sessions_tws" not in QUERIES
-        with pytest.raises(ImportError, match="protobuf"):
-            P.sessionize_tws(
-                load_table(spark, sf_dir, "events").limit(0), 1800
-            )
-        return
-    from ethical_data_ingestion_spark.queries.streaming_q import (
-        streaming_sessions_tws,
-        streaming_sessions_stateful,
-    )
-
-    tws = {tuple(r) for r in streaming_sessions_tws(spark, sf_dir).collect()}
-    aipws = {
-        tuple(r) for r in streaming_sessions_stateful(spark, sf_dir).collect()
-    }
-    assert tws == aipws
 
 
 def test_availablenow_resume_processes_only_delta(spark, sf_dir, tmp_path):

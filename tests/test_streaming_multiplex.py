@@ -1,33 +1,27 @@
-"""Multiplexed / shared-artifact streaming panels (round-9 verdict item 8,
-r13 verdict item 2): one stream pass serving a panel family must be
-row-identical to the dedicated single drains.
+"""Shared-artifact streaming panels: one stream pass serving a panel
+family must be row-identical to the dedicated single drains.
 
-r13 rewired the registered ingest/window panels onto session-shared
-drained-rows artifacts (the multiplex front half published via
-``materialize.shared``); the dedicated engine drains live on as
-``single_drain_*`` twins. These tests pin BOTH equivalences:
-
-* multiplexed_* dict panels ≡ single-drain twins;
-* the REGISTERED queries (shared-artifact path) ≡ single-drain twins —
-  the row-identity the oracle hash gate relies on.
+The registered ingest and window panels read session-shared drained-rows
+artifacts (``_drained_doc_rows``, ``_drained_event_rows``,
+``_tumbling_table``, published via ``materialize.shared``); the dedicated
+engine drains live on as ``single_drain_*`` twins. The test pins the
+registered queries to those twins — the row-identity the oracle hash
+gate relies on.
 """
 
 from __future__ import annotations
 
 from ethical_data_ingestion_spark import registry
 from ethical_data_ingestion_spark.queries import streaming_q as SQ
-from ethical_data_ingestion_spark.queries.streaming_q import (
-    multiplexed_ingest_drains,
-)
 
 SF_DIR = "/root/testdata/sf0.001"
 
-#: registered name -> dedicated single-drain twin (None: the registered
-#: body IS the dedicated drain).
-_INGEST_TWINS = {
-    "streaming_incremental_dedup": None,
+#: registered name -> dedicated single-drain twin.
+_TWINS = {
     "streaming_quarantine_gate": SQ.single_drain_quarantine_gate,
     "streaming_curation_gate": SQ.single_drain_curation_gate,
+    "streaming_anomaly_windows": SQ.single_drain_anomaly_windows,
+    "streaming_topk_trending": SQ.single_drain_topk_trending,
 }
 
 
@@ -35,45 +29,10 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_multiplexed_panels_row_identical_to_single_drains(spark):
-    muxed = multiplexed_ingest_drains(spark, SF_DIR)
-    assert set(muxed) == set(_INGEST_TWINS)
-    for name, twin in _INGEST_TWINS.items():
-        single = (twin or registry.QUERIES[name])(spark, SF_DIR)
-        assert muxed[name].columns == single.columns, name
-        got, want = _rows(muxed[name]), _rows(single)
-        assert got == want, name
-        assert got, name  # non-vacuous
-
-
-_WINDOW_TWINS = {
-    "streaming_tumbling_hourly": None,
-    "streaming_anomaly_windows": SQ.single_drain_anomaly_windows,
-    "streaming_topk_trending": SQ.single_drain_topk_trending,
-}
-
-
-def test_multiplexed_window_panels_row_identical_to_single_drains(spark):
-    from ethical_data_ingestion_spark.queries.streaming_q import (
-        multiplexed_window_drains,
-    )
-
-    muxed = multiplexed_window_drains(spark, SF_DIR)
-    assert set(muxed) == set(_WINDOW_TWINS)
-    for name, twin in _WINDOW_TWINS.items():
-        single = (twin or registry.QUERIES[name])(spark, SF_DIR)
-        assert muxed[name].columns == single.columns, name
-        got, want = _rows(muxed[name]), _rows(single)
-        assert got == want, name
-        assert got, name  # non-vacuous
-
-
 def test_registered_shared_artifact_panels_match_single_drains(spark):
-    """The r13 registered bodies (session-shared drained-rows artifacts)
+    """The registered bodies (session-shared drained-rows artifacts)
     must stay row-identical to the dedicated engine drains."""
-    for name, twin in {**_INGEST_TWINS, **_WINDOW_TWINS}.items():
-        if twin is None:
-            continue
+    for name, twin in _TWINS.items():
         got = _rows(registry.QUERIES[name](spark, SF_DIR))
         want = _rows(twin(spark, SF_DIR))
         assert got == want, name
