@@ -18,7 +18,7 @@ cardinality, stable) so per-source ingests prune to one partition.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 
@@ -63,6 +63,10 @@ def upsert_ignore(
     Two narrow shuffles (anti join + window) on the key columns; with the
     table bucketed/partitioned on the leading key both prune. Replaces the
     reference's row-at-a-time loop (``ethical_crawler.py:914-936``).
+
+    The append is the only action: the inserted count is observed on it,
+    so ``new``'s plan (and any observation on it) runs once. A batch with
+    nothing new still appends one zero-row file.
     """
     fresh = dedupe_first(new, keys, order_col)
     if table_exists(spark, table):
@@ -81,16 +85,15 @@ def upsert_ignore(
                 for f in target.fields
             ]
         )
-    n = fresh.count()
-    if n:
-        fresh.write.mode("append").format("parquet").saveAsTable(table)
-    return n
+    inserted = Observation("upsert_ignore")
+    save_table(fresh.observe(inserted, F.count(F.lit(1)).alias("n")), table, "append")
+    return inserted.get["n"]
 
 
 def append_audit(spark: SparkSession, rows: list[dict], schema, table: str) -> None:
     """Audit-log append (``ethical_crawler.py:891-907``): small
     driver-built batch → bulk append."""
-    spark.createDataFrame(rows, schema).write.mode("append").format("parquet").saveAsTable(table)
+    save_table(spark.createDataFrame(rows, schema), table, "append")
 
 
 def latest_audit_state(audit: DataFrame, key: str, ts_col: str, tiebreak: str) -> DataFrame:

@@ -34,8 +34,9 @@ import argparse
 import json
 import sys
 from collections.abc import Sequence
+from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import catalog
@@ -45,7 +46,7 @@ from .operators.analytics import composite_stats, frequency_table, source_stats
 from .operators.search import equality_filters, ilike_any
 from .schemas import COMPLIANCE_CHECKS, DATA_RECORDS, DATA_SOURCES
 from .sources.adapters import ALL_SOURCES, raw_to_records, union_sources
-from .sources.compliance import gate, standard_rules, with_issues
+from .sources.compliance import audit_rows, standard_rules, with_issues
 
 #: data_type emitted per source, matching the adapters
 #: (``ethical_crawler.py:387, 540, 650, 732``).
@@ -124,11 +125,18 @@ def cmd_collect(
     spark: SparkSession, raw_path: str, api_keys: set[str] | None = None
 ) -> dict[str, int]:
     """``collect`` (``ethical_crawler.py:1157-1204``): spooled JSON → per-
-    source record mapping → compliance gate → upsert + audit.
+    source record mapping → compliance rules → upsert + audit.
 
     ``raw_path`` holds one JSON document per line with a ``_source`` field
     naming the producing source (what the rate-limited driver-side fetcher
-    spools). Returns per-source inserted counts plus quarantine size.
+    spools). Returns per-source compliant counts (sources with any), rows
+    inserted and rows quarantined.
+
+    Like the reference's one visit per record, the spool's plan runs once:
+    the rules flag one batch, and its catalog write is the only action over
+    it. The counts and each source's issue union are
+    :class:`~pyspark.sql.Observation` metrics of that write; the audit rows
+    (one per source in the spool) are built from them on the driver.
     """
     raw = spark.read.text(raw_path).select(
         F.get_json_object("value", "$._source").alias("source_name"),
@@ -149,51 +157,35 @@ def cmd_collect(
         "rate_limit_per_second",
         F.lit(True).alias("robots_txt_compliant"),  # fail-open (:257-266)
     )
-    enriched = records.join(F.broadcast(srcs), "source_name", "left")
+    flagged = with_issues(records.join(F.broadcast(srcs), "source_name", "left"), standard_rules())
 
-    rules = standard_rules()
-    passing, quarantined = gate(enriched, rules)
-    ctx_cols = [
-        "requires_api_key",
-        "api_key_present",
-        "rate_limit_per_second",
-        "robots_txt_compliant",
-    ]
-
+    ok, src = F.size("issues") == 0, F.col("source_name")
+    names = [spec.name for spec in ALL_SOURCES]
+    seen = Observation("collect")
+    flagged = flagged.observe(
+        seen,
+        F.count_if(~ok).alias("_quarantined"),
+        *[F.count_if(ok & (src == n)).alias(n) for n in names],
+        # per source, the union of its distinct issue arrays (a few values)
+        *[F.array_distinct(F.flatten(F.collect_set(F.when(src == n, F.col("issues")))))
+          .alias("issues:" + n) for n in names],
+    )
     n_inserted = catalog.upsert_ignore(
         spark,
-        passing.drop(*ctx_cols),
+        flagged.filter(ok).drop("issues", *srcs.columns[1:]),
         "data_records",
         ["source_name", "record_id"],
         "record_id",
     )
 
-    # Audit append: one ComplianceCheck row per source (SURVEY #9/#33).
-    checked = with_issues(enriched, rules)
-    audit = checked.groupBy("source_name").agg(
-        F.current_timestamp().alias("check_time"),
-        F.lit(True).alias("robots_txt_compliant"),
-        F.min(~F.array_contains("issues", "invalid rate limit")).alias(
-            "rate_limit_compliant"
-        ),
-        F.lit(True).alias("terms_compliant"),
-        F.min(
-            ~F.array_contains("issues", "requires API key but none provided")
-        ).alias("api_key_valid"),
-        F.array_distinct(F.flatten(F.collect_list("issues"))).alias("issues"),
-        F.array().cast("array<string>").alias("recommendations"),
-    ).withColumn("id", F.lit(None).cast("long"))
-    audit.select([f.name for f in COMPLIANCE_CHECKS.fields]).write.mode(
-        "append"
-    ).format("parquet").saveAsTable("compliance_checks")
-
-    counts = {
-        r["source_name"]: r["n"]
-        for r in passing.groupBy("source_name").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    counts["_inserted"] = n_inserted
-    counts["_quarantined"] = quarantined.count()
-    return counts
+    # Audit append: one ComplianceCheck row per source in the spool, i.e.
+    # with a compliant row or an issue (SURVEY #9/#33).
+    m = seen.get  # after the write returned, so a failed write raises
+    issues = {n: m["issues:" + n] for n in names if m[n] or m["issues:" + n]}
+    now = datetime.now(timezone.utc)
+    catalog.append_audit(spark, audit_rows(issues, now), COMPLIANCE_CHECKS, "compliance_checks")
+    counts = {n: m[n] for n in names if m[n]}
+    return {**counts, "_inserted": n_inserted, "_quarantined": m["_quarantined"]}
 
 
 def cmd_search(

@@ -76,11 +76,11 @@ def get_spark(
         # Partition sizing for the harness SFs: fixture files are ~10 MB,
         # so the 128 MB default reads each table as 1-3 partitions and
         # CPU-heavy stages (decimal aggs, array intersects) run on a
-        # handful of cores. 2 MB splits give the local[32] box real
-        # parallelism; AQE's advisory size is lowered to match so
-        # coalescing doesn't undo it after shuffles. Cluster deployments
-        # at real scale should raise both back toward defaults — that's
-        # the documented meaning of these envs.
+        # handful of cores. 2 MB splits give every core of the local
+        # master (one per CPU by default) work; AQE's advisory size is
+        # lowered to match so coalescing doesn't undo it after shuffles.
+        # Cluster deployments at real scale should raise both back toward
+        # defaults — that's the documented meaning of these envs.
         .config(
             "spark.sql.files.maxPartitionBytes",
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "2097152"),

@@ -4,9 +4,10 @@ The reference's gate is imperative: ``check_compliance()`` accumulates an
 issues list per source and ``collect_all_data`` skips any source with a
 non-empty list (``ethical_crawler.py:304-330, 943-948``). The BASELINE.json
 north-star names the Spark shape explicitly: *DataFrame transformations
-with validation rules* — rules evaluate as columns, failing rows go to a
-quarantine sink, passing rows flow on. Declarative, auditable, and at
-100 TB the gate is a filter fused into the scan, not a driver loop.
+with validation rules* — rules evaluate as columns, failing rows are
+quarantined (counted and audited, not written), passing rows flow on.
+Declarative, auditable, and at 100 TB the gate is a filter fused into the
+scan, not a driver loop.
 """
 
 from __future__ import annotations
@@ -15,6 +16,11 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+ROBOTS_ISSUE = "robots.txt disallows access"
+API_KEY_ISSUE = "requires API key but none provided"
+RATE_LIMIT_ISSUE = "invalid rate limit"
 
 
 @dataclass(frozen=True)
@@ -41,17 +47,17 @@ def standard_rules(
         Rule(
             "robots",
             F.coalesce(F.col(robots_ok_col), F.lit(True)),  # fail-open like :257-266
-            "robots.txt disallows access",
+            ROBOTS_ISSUE,
         ),
         Rule(
             "api_key",
             ~F.col(requires_key_col) | F.coalesce(F.col(has_key_col), F.lit(False)),
-            "requires API key but none provided",
+            API_KEY_ISSUE,
         ),
         Rule(
             "rate_limit",
             F.col(rate_col).isNotNull() & (F.col(rate_col) > 0),
-            "invalid rate limit",
+            RATE_LIMIT_ISSUE,
         ),
     ]
 
@@ -68,24 +74,22 @@ def with_issues(df: DataFrame, rules: list[Rule]) -> DataFrame:
     )
 
 
-def gate(df: DataFrame, rules: list[Rule]) -> tuple[DataFrame, DataFrame]:
-    """Split into (compliant, quarantined) — the distributed equivalent of
-    'skip the whole source when check.issues is non-empty'
-    (``ethical_crawler.py:943-948``). Both sides share the one evaluated
-    plan; rejected rows keep their issues column for the audit trail."""
-    checked = with_issues(df, rules)
-    passing = checked.filter(F.size("issues") == 0).drop("issues")
-    quarantined = checked.filter(F.size("issues") > 0)
-    return passing, quarantined
-
-
-def audit_rows(checked: DataFrame, source_col: str) -> DataFrame:
-    """ComplianceCheck audit records (``ethical_crawler.py:183-194``):
-    per-source booleans + issue union + check time — appended to the audit
-    table (catalog.append_audit), latest state read back via
-    catalog.latest_audit_state (the #24 pattern)."""
-    return checked.groupBy(source_col).agg(
-        F.min(F.size("issues") == 0).alias("compliant"),
-        F.array_distinct(F.flatten(F.collect_list("issues"))).alias("issues"),
-        F.current_timestamp().alias("check_time"),
-    )
+def audit_rows(issues_by_source: dict[str, list[str]], check_time) -> list[dict]:
+    """ComplianceCheck audit records (``ethical_crawler.py:183-194``), one
+    per source seen in a batch, from that source's issue union: built on
+    the driver, appended by ``catalog.append_audit``, latest state read
+    back by ``catalog.latest_audit_state`` (the #24 pattern)."""
+    return [
+        {
+            "id": None,
+            "source_name": name,
+            "check_time": check_time,
+            "robots_txt_compliant": ROBOTS_ISSUE not in issues,
+            "rate_limit_compliant": RATE_LIMIT_ISSUE not in issues,
+            "terms_compliant": True,
+            "api_key_valid": API_KEY_ISSUE not in issues,
+            "issues": issues,
+            "recommendations": [],
+        }
+        for name, issues in issues_by_source.items()
+    ]

@@ -8,6 +8,7 @@ from __future__ import annotations
 import json
 import subprocess
 import sys
+from pathlib import Path
 
 from ethical_data_ingestion_spark import registry
 from ethical_data_ingestion_spark.ann_store import (
@@ -17,10 +18,11 @@ from ethical_data_ingestion_spark.ann_store import (
 )
 
 SF_DIR = "/root/testdata/sf0.001"
+ROOT = str(Path(__file__).resolve().parents[1])
 
 _COLD_SCRIPT = """
 import json, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {root!r})
 from pyspark.sql import SparkSession
 spark = (SparkSession.builder.master("local[2]")
          .config("spark.sql.shuffle.partitions", "2")
@@ -63,7 +65,7 @@ def test_cold_start_subprocess_serves_identically(spark, tmp_path):
     save_chunk_ann_index(spark, SF_DIR, idx)
     out_path = str(tmp_path / "cold.json")
     script = _COLD_SCRIPT.format(
-        sf_dir=SF_DIR, index_dir=idx, out_path=out_path
+        root=ROOT, sf_dir=SF_DIR, index_dir=idx, out_path=out_path
     )
     proc = subprocess.run(
         [sys.executable, "-c", script],

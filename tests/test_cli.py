@@ -7,10 +7,16 @@ the same lifecycle a reference user runs through the click CLI
 from __future__ import annotations
 
 import json
+import time
+import uuid
 
 import pytest
 
 from ethical_data_ingestion_spark import cli
+
+#: Spark jobs one collect of PAYLOADS into an empty catalog may issue. It
+#: issues 5 with local[4]: the spool's plan runs once, in the catalog write.
+JOBS_PER_COLLECT = 6
 
 #: Spooled fetcher output: one JSON document per line, ``_source`` names
 #: the producing adapter (nyc → dataset, sec → data_feed, comtrade →
@@ -49,43 +55,105 @@ PAYLOADS = [
 ]
 
 
+#: ``cmd_collect`` of PAYLOADS without API keys into an empty catalog.
+FIRST_COLLECT = {"NYC Open Data": 6, "SEC EDGAR": 1, "_inserted": 7, "_quarantined": 1}
+
+
+def write_spool(path) -> str:
+    path.write_text("\n".join(json.dumps(p) for p in PAYLOADS))
+    return str(path)
+
+
 @pytest.fixture(scope="module")
 def warehouse(spark, tmp_path_factory):
-    spool = tmp_path_factory.mktemp("spool") / "payloads.jsonl"
-    spool.write_text("\n".join(json.dumps(p) for p in PAYLOADS))
+    spool = write_spool(tmp_path_factory.mktemp("spool") / "payloads.jsonl")
     for t in ("data_records", "compliance_checks", "data_sources"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
     created = cli.cmd_setup(spark)
     assert set(created) == {"data_records", "compliance_checks", "data_sources"}
-    counts = cli.cmd_collect(spark, str(spool))
+    counts = cli.cmd_collect(spark, spool)
     return counts
+
+
+@pytest.fixture
+def fresh_db(spark, tmp_path):
+    """An empty catalog in its own database, current for one test, so a
+    collect starts from ``setup`` without touching the module's tables."""
+    name = f"fresh_{uuid.uuid4().hex[:8]}"
+    spark.sql(f"CREATE DATABASE {name} LOCATION '{tmp_path / name}'")
+    spark.catalog.setCurrentDatabase(name)
+    try:
+        cli.cmd_setup(spark)
+        yield name
+    finally:
+        spark.catalog.setCurrentDatabase("default")
+        spark.sql(f"DROP DATABASE {name} CASCADE")
 
 
 def test_collect_gates_and_upserts(spark, warehouse):
     # UN Comtrade requires an API key we did not supply → whole source
     # quarantined (ethical_crawler.py:943-948); NYC + SEC pass.
-    assert warehouse["_quarantined"] == 1
-    assert warehouse["_inserted"] == 7
+    assert warehouse == FIRST_COLLECT
     assert "UN Comtrade" not in {
         r.source_name for r in spark.table("data_records").select("source_name").distinct().collect()
     }
-    # Re-collect is idempotent: INSERT OR IGNORE semantics on the key.
-    again = cli.cmd_collect(spark, warehouse["_spool"]) if "_spool" in warehouse else None
-    assert again is None or again["_inserted"] == 0
+
+
+def group_jobs(sc, group: str) -> list[int]:
+    """Job ids of ``group`` once the status listener has caught up: every
+    job finished and the count unchanged over two polls."""
+    st = sc.statusTracker()
+    last = None
+    for _ in range(50):
+        jobs = sorted(st.getJobIdsForGroup(group))
+        done = all((ji := st.getJobInfo(j)) and ji.status != "RUNNING" for j in jobs)
+        if done and jobs == last:
+            return jobs
+        last = jobs
+        time.sleep(0.1)
+    return last
+
+
+def test_collect_is_one_pass(spark, fresh_db, tmp_path):
+    """One collect writes the spool's plan once: the per-source,
+    quarantined and inserted counts and the audit inputs are observed on
+    that write, not computed by further actions over the spool."""
+    spool = write_spool(tmp_path / "payloads.jsonl")
+    sc = spark.sparkContext
+    sc.setJobGroup(fresh_db, "one collect")
+    try:
+        counts = cli.cmd_collect(spark, spool)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert counts == FIRST_COLLECT
+    assert len(group_jobs(sc, fresh_db)) <= JOBS_PER_COLLECT
+
+
+def test_collect_audit_rows(spark, fresh_db, tmp_path):
+    cli.cmd_collect(spark, write_spool(tmp_path / "payloads.jsonl"))
+    rows = {r.source_name: r for r in spark.table("compliance_checks").collect()}
+    # one row per source in the spool; College Scorecard offered nothing
+    assert set(rows) == {"NYC Open Data", "SEC EDGAR", "UN Comtrade"}
+    assert len({r.check_time for r in rows.values()}) == 1
+    assert None not in {r.check_time for r in rows.values()}
+    for name, r in rows.items():
+        keyed = name != "UN Comtrade"
+        assert r.api_key_valid is keyed, name
+        assert r.issues == ([] if keyed else ["requires API key but none provided"]), name
+        assert r.rate_limit_compliant is True, name
+        assert r.robots_txt_compliant is True and r.terms_compliant is True, name
+        assert r.recommendations == [], name
 
 
 def test_collect_idempotent(spark, warehouse, tmp_path):
-    spool = tmp_path / "again.jsonl"
-    spool.write_text("\n".join(json.dumps(p) for p in PAYLOADS))
-    counts = cli.cmd_collect(spark, str(spool))
+    counts = cli.cmd_collect(spark, write_spool(tmp_path / "again.jsonl"))
     assert counts["_inserted"] == 0
     assert spark.table("data_records").count() == 7
 
 
 def test_api_key_unlocks_source(spark, warehouse, tmp_path):
-    spool = tmp_path / "keyed.jsonl"
-    spool.write_text("\n".join(json.dumps(p) for p in PAYLOADS))
-    counts = cli.cmd_collect(spark, str(spool), api_keys={"UN Comtrade"})
+    spool = write_spool(tmp_path / "keyed.jsonl")
+    counts = cli.cmd_collect(spark, spool, api_keys={"UN Comtrade"})
     assert counts["_quarantined"] == 0
     assert counts["_inserted"] == 1  # only the Comtrade record is new
 

@@ -3,8 +3,11 @@
 from __future__ import annotations
 
 import inspect
+from pathlib import Path
 
 from ethical_data_ingestion_spark import registry
+
+ROOT = str(Path(__file__).resolve().parents[1])
 
 
 def test_every_oracle_has_a_query():
@@ -141,7 +144,7 @@ def test_any_query_module_imports_first():
             [
                 sys.executable,
                 "-c",
-                "import sys; sys.path.insert(0, '/root/repo'); "
+                f"import sys; sys.path.insert(0, {ROOT!r}); "
                 f"import ethical_data_ingestion_spark.queries.{m}",
             ],
             capture_output=True,
@@ -199,7 +202,7 @@ def test_bench_headline_is_duplicate_free_and_registered():
     wrong #1b); an unregistered entry KeyErrors mid-suite."""
     import importlib.util
 
-    spec = importlib.util.spec_from_file_location("bench", "/root/repo/bench.py")
+    spec = importlib.util.spec_from_file_location("bench", f"{ROOT}/bench.py")
     bench = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(bench)
 

@@ -83,11 +83,13 @@ def test_compliance_gate_split_and_issues(spark):
         "source string, requires_api_key boolean, api_key_present boolean, "
         "robots_txt_compliant boolean, rate_limit_per_second double",
     )
-    passing, quarantined = compliance.gate(df, compliance.standard_rules())
-    assert {r.source for r in passing.collect()} == {"ok"}
-    bad = {r.source: r.issues for r in quarantined.collect()}
-    assert bad["needs_key"] == ["requires API key but none provided"]
-    assert bad["bad_rate"] == ["invalid rate limit"]
+    issues = {
+        r.source: r.issues
+        for r in compliance.with_issues(df, compliance.standard_rules()).collect()
+    }
+    assert {s for s, i in issues.items() if not i} == {"ok"}
+    assert issues["needs_key"] == ["requires API key but none provided"]
+    assert issues["bad_rate"] == ["invalid rate limit"]
 
 
 def test_rate_limiter_paces():

@@ -21,7 +21,8 @@ from datetime import date, datetime
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from ethical_data_ingestion_spark.schemas import FIXTURE_TABLES  # noqa: E402
 from ethical_data_ingestion_spark.session import get_spark  # noqa: E402
@@ -112,7 +113,7 @@ def _checked_run(sf_dir: str, only: set, err_path: str) -> int:
         if mem:
             con.execute(f"SET memory_limit='{mem}'")
             spill = os.environ.get(
-                "SPARK_GRAFT_DUCKDB_TMP", "/root/repo/.scratch/duckdb_spill"
+                "SPARK_GRAFT_DUCKDB_TMP", os.path.join(ROOT, ".scratch", "duckdb_spill")
             )
             os.makedirs(spill, exist_ok=True)
             con.execute(f"SET temp_directory='{spill}'")
