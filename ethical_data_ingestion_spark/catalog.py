@@ -21,6 +21,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .io import local_frame
+from .operators.analytics import latest_per_group
+
 
 def save_table(df: DataFrame, name: str, if_exists: str = "replace") -> None:
     """``insert_df_async`` equivalent (``ethical_crawler.py:100-125``):
@@ -92,19 +95,14 @@ def upsert_ignore(
 
 def append_audit(spark: SparkSession, rows: list[dict], schema, table: str) -> None:
     """Audit-log append (``ethical_crawler.py:891-907``): small
-    driver-built batch → bulk append."""
-    save_table(spark.createDataFrame(rows, schema), table, "append")
+    driver-built batch → one appended file."""
+    save_table(local_frame(spark, rows, schema).coalesce(1), table, "append")
 
 
 def latest_audit_state(audit: DataFrame, key: str, ts_col: str, tiebreak: str) -> DataFrame:
     """Current-state read of the append-only audit log — latest row per
     source (``ethical_crawler.py:1437-1451``) via window dedup."""
-    w = Window.partitionBy(key).orderBy(F.desc(ts_col), F.desc(tiebreak))
-    return (
-        audit.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    return latest_per_group(audit, key, ts_col, tiebreak)
 
 
 def save_bucketed(

@@ -15,13 +15,17 @@ over the Spark catalog (argparse, stdlib-only):
 * ``collect``   (``:1157-1204``) — spooled payloads → compliance gate →
   dedupe-upsert into ``data_records`` + audit append. The network fetch is
   decoupled by design (SURVEY §3.2): ``fetch`` (or any spooler) writes one
-  JSON document per line; ``collect`` does the distributed half.
+  JSON document per line; ``collect`` scans and parses it once.
 * ``search``    (``:1206-1272``) — ILIKE search + equality filters + top-k.
 * ``analytics`` (``:1274-1350``) — per-source stats + type frequency table.
 * ``export``    (``:1352-1414``) — parquet/csv/json sink + attribution.
-* ``status``    (``:1416-1530``) — composite stats joined with the latest
-  compliance state per source (the reference does this join manually in a
-  Python dict, ``:1474-1487``; here it is a real broadcast join).
+* ``status``    (``:1416-1530``) — per-source counts joined with the latest
+  compliance state per source, in a driver dict as the reference does
+  (``:1474-1487``).
+
+``analytics`` and ``status`` fold their rows on the driver from one
+collected aggregate (``catalog_summary``); driver-built rows (panels,
+export footer, audit rows) are local relations (``io.local_frame``).
 
 Each command is a plain function taking an existing ``SparkSession`` so
 tests drive them in-process; ``main()`` only parses argv and bootstraps the
@@ -33,6 +37,7 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+from collections import Counter
 from collections.abc import Sequence
 from datetime import datetime, timezone
 
@@ -41,48 +46,23 @@ from pyspark.sql import functions as F
 
 from . import catalog
 from . import render
-from .export import attribution, export
-from .operators.analytics import composite_stats, frequency_table, source_stats
+from .export import export
+from .io import local_frame
+from .operators.analytics import catalog_summary
 from .operators.search import equality_filters, ilike_any
 from .schemas import COMPLIANCE_CHECKS, DATA_RECORDS, DATA_SOURCES
-from .sources.adapters import ALL_SOURCES, raw_to_records, union_sources
+from .sources.adapters import ALL_SOURCES, per_source, raw_to_records
 from .sources.compliance import audit_rows, standard_rules, with_issues
-
-#: data_type emitted per source, matching the adapters
-#: (``ethical_crawler.py:387, 540, 650, 732``).
-DATA_TYPE_BY_SOURCE = {
-    "NYC Open Data": "dataset",
-    "UN Comtrade": "api_endpoint",
-    "SEC EDGAR": "data_feed",
-    "College Scorecard": "api_endpoint",
-}
 
 SEARCH_COLUMNS = ["title", "description", "content_summary"]
 
-
-def sources_df(spark: SparkSession, api_keys: set[str]) -> DataFrame:
-    """Source registry as a (tiny, broadcastable) DataFrame — the rows the
-    reference hard-codes in its adapter constructors
-    (``ethical_crawler.py:347-356, 490-499, 591-600, 684-693``)."""
-    rows = [
-        {
-            "name": s.name,
-            "base_url": s.base_url,
-            "api_endpoint": s.api_endpoint,
-            "terms_of_service_url": None,
-            "robots_txt_url": s.base_url + "/robots.txt",
-            "data_license": s.data_license,
-            "requires_api_key": s.requires_api_key,
-            "rate_limit_per_second": s.rate_limit_per_second,
-            "last_checked": None,
-            "is_compliant": True,
-            "compliance_notes": "",
-        }
-        for s in ALL_SOURCES
-    ]
-    df = spark.createDataFrame(rows, DATA_SOURCES)
-    keys = F.array(*[F.lit(k) for k in sorted(api_keys)]) if api_keys else F.array().cast("array<string>")
-    return df.withColumn("api_key_present", F.array_contains(keys, F.col("name")) if api_keys else F.lit(False))
+#: the panels' shapes: what ``source_stats``, ``frequency_table`` and the
+#: status join over ``composite_stats`` return
+STATS_SCHEMA = ("source_name string, record_count long not null, type_count long not null, "
+                "avg_size double, first_ingested timestamp, last_ingested timestamp")
+FREQ_SCHEMA = "data_type string, count long not null"
+STATUS_SCHEMA = ("source_name string, record_count long, type_count long not null, "
+                 "last_ingested timestamp, compliant boolean, issues array<string>")
 
 
 def cmd_setup(spark: SparkSession) -> list[str]:
@@ -95,7 +75,7 @@ def cmd_setup(spark: SparkSession) -> list[str]:
         ("data_sources", DATA_SOURCES),
     ]:
         if not catalog.table_exists(spark, name):
-            spark.createDataFrame([], schema).write.format("parquet").saveAsTable(name)
+            local_frame(spark, [], schema).write.format("parquet").saveAsTable(name)
             created.append(name)
     return created
 
@@ -132,39 +112,31 @@ def cmd_collect(
     spools). Returns per-source compliant counts (sources with any), rows
     inserted and rows quarantined.
 
-    Like the reference's one visit per record, the spool's plan runs once:
-    the rules flag one batch, and its catalog write is the only action over
-    it. The counts and each source's issue union are
-    :class:`~pyspark.sql.Observation` metrics of that write; the audit rows
-    (one per source in the spool) are built from them on the driver.
+    Like the reference's one visit per record, the spool is scanned and
+    parsed once: one ``from_json`` per line, and the rules' inputs are
+    driver constants per source (a CASE on the source name; key presence
+    is ``isin`` of the held keys). The catalog write is the only action
+    over the batch; the counts and each source's issue union are
+    :class:`~pyspark.sql.Observation` metrics of it, and the audit rows
+    (one per source in the spool) are built from them on the driver and
+    appended as one file. Lines naming no registered source are dropped.
     """
-    raw = spark.read.text(raw_path).select(
-        F.get_json_object("value", "$._source").alias("source_name"),
-        F.col("value").alias("payload"),
-    )
-    per_source = [
-        raw_to_records(raw, spec, DATA_TYPE_BY_SOURCE[spec.name])
-        for spec in ALL_SOURCES
-    ]
-    records = union_sources(per_source)
-
-    # Attach the compliance context (requires_api_key / key presence /
-    # robots verdict) via broadcast join — 4 rows, never a shuffle.
-    srcs = sources_df(spark, api_keys or set()).select(
-        F.col("name").alias("source_name"),
-        "requires_api_key",
-        "api_key_present",
-        "rate_limit_per_second",
+    records = raw_to_records(spark.read.text(raw_path).select(F.col("value").alias("payload")))
+    src = F.col("source_name")
+    context = [
+        per_source(src, "requires_api_key").alias("requires_api_key"),
+        src.isin(sorted(api_keys or ())).alias("api_key_present"),
+        per_source(src, "rate_limit_per_second").alias("rate_limit_per_second"),
         F.lit(True).alias("robots_txt_compliant"),  # fail-open (:257-266)
-    )
-    flagged = with_issues(records.join(F.broadcast(srcs), "source_name", "left"), standard_rules())
+    ]
+    flagged = with_issues(records.select("*", *context), standard_rules())
 
-    ok, src = F.size("issues") == 0, F.col("source_name")
+    ok = F.size("issues") == 0
     names = [spec.name for spec in ALL_SOURCES]
     seen = Observation("collect")
     flagged = flagged.observe(
         seen,
-        F.count_if(~ok).alias("_quarantined"),
+        F.count_if(~ok & src.isin(names)).alias("_quarantined"),
         *[F.count_if(ok & (src == n)).alias(n) for n in names],
         # per source, the union of its distinct issue arrays (a few values)
         *[F.array_distinct(F.flatten(F.collect_set(F.when(src == n, F.col("issues")))))
@@ -172,7 +144,7 @@ def cmd_collect(
     )
     n_inserted = catalog.upsert_ignore(
         spark,
-        flagged.filter(ok).drop("issues", *srcs.columns[1:]),
+        flagged.filter(ok).select(*records.columns),
         "data_records",
         ["source_name", "record_id"],
         "record_id",
@@ -203,49 +175,64 @@ def cmd_search(
     return df.orderBy(F.desc("ingested_at"), "source_name", "record_id").limit(limit)
 
 
+def _summary(spark: SparkSession) -> tuple[dict[int, list], Counter]:
+    """``catalog_summary`` of ``data_records``, collected once: its rows by
+    grouping set (0 per (source, type), 1 per source, 2 per type), and
+    COUNT(DISTINCT data_type) per source."""
+    rows = catalog_summary(spark.table("data_records"), "source_name", "data_type",
+                           "size_bytes", "ingested_at").collect()
+    by_set = {g: [r for r in rows if r.g == g] for g in (0, 1, 2)}
+    return by_set, Counter(r.source_name for r in by_set[0] if r.data_type is not None)
+
+
+def _ranked(rows: list[list]) -> list[list]:
+    """ORDER BY <column 1> DESC, <column 0> ASC (nulls first, as in Spark)."""
+    return sorted(rows, key=lambda r: (-r[1], r[0] is not None, r[0] or ""))
+
+
 def cmd_analytics(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
     """``analytics`` (``ethical_crawler.py:1274-1350``): the two panels —
-    per-source 5-aggregate rollup and data-type frequency table."""
-    df = spark.table("data_records")
-    return (
-        source_stats(df, "source_name", "data_type", "size_bytes", "ingested_at"),
-        frequency_table(df, "data_type"),
-    )
+    per-source 5-aggregate rollup (``source_stats``) and data-type
+    frequency table (``frequency_table``) — folded on the driver from one
+    collected ``catalog_summary`` and returned as local relations."""
+    summary, types = _summary(spark)
+    stats = [[r.source_name, r.n, types[r.source_name], r.avg, r.first, r.last] for r in summary[1]]
+    freq = [[r.data_type, r.n] for r in summary[2]]
+    return (local_frame(spark, _ranked(stats), STATS_SCHEMA),
+            local_frame(spark, _ranked(freq), FREQ_SCHEMA))
 
 
 def cmd_export(
     spark: SparkSession, fmt: str, output: str, where: str | None = None
 ) -> DataFrame:
     """``export`` (``ethical_crawler.py:1352-1414``): filtered sink write +
-    distinct-source attribution footer."""
+    distinct-source attribution footer. The footer's sources are observed
+    on the write itself, so the export is one Spark job and the footer a
+    local relation."""
     df = spark.table("data_records")
-    export(df, fmt, output, where=where)
-    return attribution(df, "source_name", where=where)
+    df = df.filter(F.expr(where)) if where else df
+    seen = Observation("export")
+    export(df.observe(seen, F.array_sort(F.collect_set("source_name")).alias("s")), fmt, output)
+    return local_frame(spark, [(s,) for s in seen.get["s"]], "source_name string")
 
 
 def cmd_status(spark: SparkSession) -> DataFrame:
-    """``status`` (``ethical_crawler.py:1416-1530``): per-source composite
-    stats joined with the latest compliance verdict. The reference joins
-    these in a Python dict on the driver (``:1474-1487``); here it is a
-    broadcast hash join on ``source_name``."""
-    stats = composite_stats(
-        spark.table("data_records"), "source_name", "data_type", "ingested_at"
-    )
-    per_source = stats.groupBy("source_name").agg(
-        F.sum("count").alias("record_count"),
-        F.countDistinct("data_type").alias("type_count"),
-        F.max("last_ingested").alias("last_ingested"),
-    )
-    latest = catalog.latest_audit_state(
-        spark.table("compliance_checks"), "source_name", "check_time", "api_key_valid"
-    ).select(
-        "source_name",
-        (F.size("issues") == 0).alias("compliant"),
-        F.col("issues"),
-    )
-    return per_source.join(F.broadcast(latest), "source_name", "left").orderBy(
-        F.desc("record_count"), "source_name"
-    )
+    """``status`` (``ethical_crawler.py:1416-1530``): per-source record and
+    type counts and latest ingest (the ``composite_stats`` rollup, folded
+    from one collected ``catalog_summary``) joined with the latest
+    compliance verdict per source. As in the reference (``:1474-1487``),
+    the join is a dict lookup on the driver; the result is a local
+    relation."""
+    summary, types = _summary(spark)
+    latest = {
+        r.source_name: (r.compliant, r.issues)
+        for r in catalog.latest_audit_state(
+            spark.table("compliance_checks"), "source_name", "check_time", "api_key_valid"
+        ).select("source_name", (F.size("issues") == 0).alias("compliant"), "issues").collect()
+    }
+    rows = [[r.source_name, r.n, types[r.source_name], r.last, *latest.get(r.source_name, (None, None))]
+            for r in summary[1]]
+    return local_frame(spark, _ranked(rows), STATUS_SCHEMA)
 
 
 def cmd_curate(spark: SparkSession, data_dir: str, output: str) -> dict:

@@ -1,4 +1,4 @@
-"""Fixture-table loaders.
+"""Fixture-table loaders, and the one way driver-built rows enter Spark.
 
 The reference reaches its data through one embedded DuckDB file
 (``ethical_crawler.py:777``); our at-rest layer is parquet on a distributed
@@ -11,9 +11,29 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructType
+from pyspark.sql.types import LongType, StructType, _parse_datatype_string
 
 from .schemas import FIXTURE_TABLES
+
+
+def local_frame(spark: SparkSession, rows: list, schema: StructType | str) -> DataFrame:
+    """Driver-built rows (tuples, or dicts keyed by field name) as a local
+    relation: an Arrow table handed to ``createDataFrame``, so collecting
+    it runs no Spark job. ``createDataFrame(<python list>)`` instead
+    parallelizes the rows, and every action over it is a Spark job.
+    Writing it writes a file per row, up to the default parallelism, so
+    callers that want one file ``coalesce(1)`` the write. Timestamp fields
+    take aware datetimes or epoch microseconds."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    rows = [[r[n] for n in schema.names] if isinstance(r, dict) else r for r in rows]
+    cols = [pa.array([r[i] for r in rows], to_arrow_type(f.dataType))
+            for i, f in enumerate(schema.fields)]
+    return spark.createDataFrame(pa.Table.from_arrays(cols, names=schema.names), schema)
+
 
 #: (path) -> inferred StructType. The first scan of a path infers from the
 #: parquet footers; every later scan reuses the result — the same role a

@@ -6,8 +6,8 @@ scalar subquery, all delegated to DuckDB
 rollup on the driver (``:1468-1472``). Here each becomes ONE declarative
 Spark aggregation: partial (map-side) aggregation before the shuffle means
 the shuffle carries only |groups| rows — the property that makes these flat
-at 100 TB. The pandas re-aggregation stage is folded into the same Spark agg
-(no driver-side loops, SURVEY #26).
+at 100 TB. The CLI's panels and the pandas re-aggregation all fold from one
+such aggregate of a few rows (:func:`catalog_summary`, SURVEY #26).
 
 Float determinism: distributed SUM over doubles is order-sensitive. For
 oracle-comparable money sums we accumulate in DECIMAL (exact, associative)
@@ -99,6 +99,24 @@ def composite_stats(df: DataFrame, key1: str, key2: str, ts_col: str) -> DataFra
     )
 
 
+def catalog_summary(df: DataFrame, key: str, sub: str, avg_col: str, ts_col: str) -> DataFrame:
+    """What :func:`source_stats`, :func:`frequency_table` and the per-key
+    rollup of :func:`composite_stats` need, as ONE aggregate over the
+    grouping sets (key, sub), (key) and (sub): ``g`` is 0, 1 and 2 on them.
+    Each row has COUNT(*) ``n``, the :func:`davg` of ``avg_col`` and
+    MIN/MAX of ``ts_col`` as epoch microseconds (so a driver round trip is
+    exact in any time zone). A catalog has a few (source, type) pairs, so
+    callers collect it once and shape every panel from its rows.
+    """
+    return df.groupingSets([[key, sub], [key], [sub]], key, sub).agg(
+        F.grouping_id().alias("g"),
+        F.count(F.lit(1)).alias("n"),
+        davg(avg_col, "avg"),
+        F.unix_micros(F.min(ts_col)).alias("first"),
+        F.unix_micros(F.max(ts_col)).alias("last"),
+    )
+
+
 def latest_per_group(df: DataFrame, group_col: str, ts_col: str, tiebreak_col: str) -> DataFrame:
     """Greatest-n-per-group — the reference's only join-shaped operation, a
     correlated scalar subquery ``WHERE check_time = (SELECT MAX(check_time)
@@ -114,23 +132,6 @@ def latest_per_group(df: DataFrame, group_col: str, ts_col: str, tiebreak_col: s
         df.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
-    )
-
-
-def rollup_second_level(stats: DataFrame, key: str) -> DataFrame:
-    """The reference's client-side pandas re-aggregation
-    (``ethical_crawler.py:1468-1472``): sum(count), nunique(type), max(ts)
-    over the per-(source,type) stats — expressed as a Spark agg so it never
-    leaves the cluster.
-    """
-    return (
-        stats.groupBy(key)
-        .agg(
-            F.sum("count").alias("total_records"),
-            F.countDistinct("data_type").alias("data_types"),
-            F.max("last_ingested").alias("last_ingested"),
-        )
-        .orderBy(F.desc("total_records"), key)
     )
 
 

@@ -29,6 +29,8 @@ import pandas as pd  # module-level: pandas_udf resolves stringified type
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..io import local_frame
+
 
 def as_double(col: str | Column) -> Column:
     c = F.col(col) if isinstance(col, str) else col
@@ -153,8 +155,9 @@ def lsh_query_buckets_local(
 ) -> DataFrame:
     """Driver-compiled (query_id, t, bucket) relation for a SMALL probe
     batch: the same :func:`lsh_bucket_ids` kernel run once in the driver
-    over the collected probe vectors, returned as a local relation — no
-    Python-worker round-trip, no exchange, broadcast-trivial. The
+    over the collected probe vectors, returned as a local relation
+    (:func:`~ethical_data_ingestion_spark.io.local_frame`) — no Python
+    worker, no exchange, no job of its own, broadcast-trivial. The
     serving-path analogue of hardcoding probe terms as literals: a probe
     batch is bounded by construction, so bucketizing it is driver work."""
     ids = np.array([i for i, _ in q_rows], dtype=np.int64)
@@ -165,7 +168,7 @@ def lsh_query_buckets_local(
         for n in range(len(q_rows))
         for t in range(out.shape[1])
     ]
-    return spark.createDataFrame(rows, "query_id long, t int, bucket int")
+    return local_frame(spark, rows, "query_id long, t int, bucket int")
 
 
 def lsh_base_buckets(

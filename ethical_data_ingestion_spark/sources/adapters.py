@@ -19,19 +19,22 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from ..functions.scalars import generate_summary, parse_date_dual
+from ..io import local_frame
 
 
 @dataclass(frozen=True)
 class SourceSpec:
     """DataSource registry row (``ethical_crawler.py:148-161``); constants
     from the four adapter constructors (``:347-356, 490-499, 591-600,
-    684-693``)."""
+    684-693``), plus the ``data_type`` each adapter stamps on its records
+    (``:387, 540, 650, 732``)."""
 
     name: str
     base_url: str
@@ -39,23 +42,26 @@ class SourceSpec:
     requires_api_key: bool
     rate_limit_per_second: float
     data_license: str
+    data_type: str
 
 
 NYC_OPEN_DATA = SourceSpec(
     "NYC Open Data", "https://data.cityofnewyork.us",
-    "https://data.cityofnewyork.us/api", False, 1.0, "Public Domain",
+    "https://data.cityofnewyork.us/api", False, 1.0, "Public Domain", "dataset",
 )
 UN_COMTRADE = SourceSpec(
     "UN Comtrade", "https://comtradeapi.un.org",
     "https://comtradeapi.un.org/data/v1", True, 0.1, "UN Comtrade License",
+    "api_endpoint",
 )
 SEC_EDGAR = SourceSpec(
     "SEC EDGAR", "https://www.sec.gov", "https://data.sec.gov", False, 0.1,
-    "Public Domain",
+    "Public Domain", "data_feed",
 )
 COLLEGE_SCORECARD = SourceSpec(
     "College Scorecard", "https://collegescorecard.ed.gov",
     "https://api.data.gov/ed/collegescorecard/v1", True, 1.0, "Public Domain",
+    "api_endpoint",
 )
 
 ALL_SOURCES = [NYC_OPEN_DATA, UN_COMTRADE, SEC_EDGAR, COLLEGE_SCORECARD]
@@ -80,34 +86,56 @@ class RateLimiter:
 
 #: Raw payload row: one JSON document string per discovered item, plus the
 #: source that produced it. What a spooling fetcher writes to storage.
-RAW_SCHEMA = StructType(
-    [
-        StructField("source_name", StringType(), False),
-        StructField("payload", StringType(), False),
-    ]
-)
+RAW_SCHEMA = StructType([StructField("source_name", StringType(), False),
+                         StructField("payload", StringType(), False)])
+
+#: Every payload key the mapping reads, parsed as text: a number, object or
+#: array keeps its JSON text, as ``get_json_object`` would return it.
+PAYLOAD_SCHEMA = StructType([
+    StructField(k, StringType()) for k in (
+        "_source", "id", "name", "description", "category", "columns_count",
+        "view_count", "tags", "updated_at", "file_format", "size_bytes")
+])
 
 
-def raw_to_records(raw: DataFrame, source: SourceSpec, data_type: str) -> DataFrame:
-    """Map raw JSON payloads → DataRecord rows (the distributed half of
-    ``discover_datasets``, e.g. NYC mapping at ``ethical_crawler.py:
-    381-405``): JSON field extraction, dual-format date parsing, summary
-    building — all Catalyst expressions over the payload column."""
-    g = lambda p: F.get_json_object("payload", f"$.{p}")  # noqa: E731
-    return raw.filter(F.col("source_name") == source.name).select(
-        F.col("source_name"),
+def per_source(src: Column, attr: str) -> Column:
+    """``CASE src WHEN <name> THEN <spec.attr> ...`` over the registry: a
+    per-source constant, null for a name no source registers."""
+    first, *rest = ALL_SOURCES
+    return reduce(lambda c, s: c.when(src == s.name, F.lit(getattr(s, attr))), rest,
+                  F.when(src == first.name, F.lit(getattr(first, attr))))
+
+
+def raw_to_records(raw: DataFrame, source: SourceSpec | None = None) -> DataFrame:
+    """Map raw JSON payloads → DataRecord rows, all sources at once (the
+    distributed half of ``discover_datasets``, e.g. NYC mapping at
+    ``ethical_crawler.py:381-405``).
+
+    Each payload is parsed once, by ``from_json`` into :data:`PAYLOAD_SCHEMA`;
+    the constants (data type, URL base, license) are a :func:`per_source`
+    CASE. ``raw`` has a ``payload`` column and either a ``source_name``
+    column or, as in the JSONL spool, a ``_source`` key in each payload.
+    ``source`` keeps one source's rows, filtered before the parse. A row
+    naming no registered source maps with null constants.
+    """
+    if source is not None:
+        raw = raw.filter(F.col("source_name") == source.name)
+    named = "source_name" in raw.columns
+    # own projection: Catalyst does not inline a costly expression used twice
+    p = raw.select(*(["source_name"] if named else []), "payload",
+                   F.from_json("payload", PAYLOAD_SCHEMA).alias("_j"))
+    g = lambda k: F.col("_j")[k]  # noqa: E731
+    src = F.col("source_name") if named else g("_source")
+    title = F.coalesce(g("name"), F.lit("(untitled)"))
+    return p.select(
+        src.alias("source_name"),
         F.coalesce(g("id"), F.md5("payload")).alias("record_id"),
-        F.coalesce(g("name"), F.lit("(untitled)")).alias("title"),
+        title.alias("title"),
         g("description").alias("description"),
-        F.lit(data_type).alias("data_type"),
-        F.concat(F.lit(source.base_url + "/"), F.coalesce(g("id"), F.lit(""))).alias("url"),
+        per_source(src, "data_type").alias("data_type"),
+        F.concat(per_source(src, "base_url"), F.lit("/"), F.coalesce(g("id"), F.lit(""))).alias("url"),
         F.col("payload").alias("metadata"),
-        generate_summary(
-            F.coalesce(g("name"), F.lit("(untitled)")),
-            g("category"),
-            F.get_json_object("payload", "$.columns_count"),
-            F.get_json_object("payload", "$.view_count"),
-        ).alias("content_summary"),
+        generate_summary(title, g("category"), g("columns_count"), g("view_count")).alias("content_summary"),
         F.coalesce(
             F.from_json(g("tags"), "array<string>"), F.array().cast("array<string>")
         ).alias("tags"),
@@ -115,41 +143,25 @@ def raw_to_records(raw: DataFrame, source: SourceSpec, data_type: str) -> DataFr
         F.current_timestamp().alias("ingested_at"),
         g("file_format").alias("file_format"),
         g("size_bytes").try_cast("long").alias("size_bytes"),  # ANSI-safe
-        F.lit(source.data_license).alias("license_info"),
+        per_source(src, "data_license").alias("license_info"),
     )
 
 
-def fetch_one(
-    raw: DataFrame, source: SourceSpec, record_id: str, data_type: str = "dataset"
-) -> DataFrame:
+def fetch_one(raw: DataFrame, source: SourceSpec, record_id: str) -> DataFrame:
     """Point lookup: detailed metadata for ONE dataset id — the parity
     helper for the reference's ``fetch_dataset_metadata``
     (``ethical_crawler.py:416-451``, surfaced per-CLI-call at
     ``:565-569``). Same mapping as the bulk discovery path (the reference
     duplicates the field mapping between discover and fetch; here it is
     one code path), restricted to the requested id. Returns a 0- or 1-row
-    DataFrame — the Optional[DataRecord] of the reference. Catalyst
-    collapses the filter into the projection over the raw scan, so a
-    spool-scale lookup evaluates the cheap id expression per row and
-    maps only the matches."""
-    return raw_to_records(raw, source, data_type).filter(
-        F.col("record_id") == record_id
-    ).limit(1)
-
-
-def union_sources(frames: list[DataFrame]) -> DataFrame:
-    """Per-source fan-out union (``ethical_crawler.py:938-966`` accumulates
-    a dict of lists; SURVEY #32): one unionByName, parallel by partition
-    instead of sequential by source."""
-    from functools import reduce
-
-    return reduce(lambda a, b: a.unionByName(b), frames)
+    DataFrame — the Optional[DataRecord] of the reference."""
+    return raw_to_records(raw, source).filter(F.col("record_id") == record_id).limit(1)
 
 
 def make_raw_df(spark: SparkSession, items: list[tuple[str, str]]) -> DataFrame:
     """Build the raw payload DataFrame from (source_name, json_str) pairs —
     the seam where a real fetcher (or a test fixture) hands data to Spark."""
-    return spark.createDataFrame(items, RAW_SCHEMA)
+    return local_frame(spark, items, RAW_SCHEMA)
 
 
 def read_spool_xml(

@@ -6,17 +6,30 @@ the same lifecycle a reference user runs through the click CLI
 
 from __future__ import annotations
 
+import datetime
+import glob
 import json
+import os
+import threading
 import time
 import uuid
+from pathlib import Path
 
+import pyarrow.parquet as pq
 import pytest
 
-from ethical_data_ingestion_spark import cli
+from ethical_data_ingestion_spark import catalog, cli
 
-#: Spark jobs one collect of PAYLOADS into an empty catalog may issue. It
-#: issues 5 with local[4]: the spool's plan runs once, in the catalog write.
-JOBS_PER_COLLECT = 6
+#: Spark jobs one collect of PAYLOADS into an empty catalog may issue: the
+#: spool's plan runs once, in the catalog write, and the audit append is
+#: one more job.
+JOBS_PER_COLLECT = 4
+#: jobs of one warm command over the module's catalog: analytics and status
+#: collect one summary aggregate (status also reads the latest audit rows);
+#: export observes its footer on its one write
+JOBS_PER_ANALYTICS = 2
+JOBS_PER_STATUS = 4
+JOBS_PER_EXPORT = 1
 
 #: Spooled fetcher output: one JSON document per line, ``_source`` names
 #: the producing adapter (nyc → dataset, sec → data_feed, comtrade →
@@ -114,19 +127,46 @@ def group_jobs(sc, group: str) -> list[int]:
     return last
 
 
-def test_collect_is_one_pass(spark, fresh_db, tmp_path):
-    """One collect writes the spool's plan once: the per-source,
-    quarantined and inserted counts and the audit inputs are observed on
-    that write, not computed by further actions over the spool."""
-    spool = write_spool(tmp_path / "payloads.jsonl")
-    sc = spark.sparkContext
-    sc.setJobGroup(fresh_db, "one collect")
+def jobs_of(spark, fn):
+    """(result of ``fn()``, number of Spark jobs it issued)."""
+    sc, group = spark.sparkContext, f"jobs_{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
     try:
-        counts = cli.cmd_collect(spark, spool)
+        out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(group_jobs(sc, group))
+
+
+def test_collect_is_one_pass(spark, fresh_db, tmp_path):
+    """One collect scans and parses the spool once: the per-source,
+    quarantined and inserted counts and the audit inputs are observed on
+    the catalog write, not computed by further actions over the spool,
+    and the compliance context is per-source constants, not a join."""
+    spool = write_spool(tmp_path / "payloads.jsonl")
+    plans = []
+    upsert = catalog.upsert_ignore
+
+    def capture(spark_, new, *args):
+        plans.append(new._jdf.queryExecution().executedPlan().toString())
+        return upsert(spark_, new, *args)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(catalog, "upsert_ignore", capture)
+        counts, jobs = jobs_of(spark, lambda: cli.cmd_collect(spark, spool))
     assert counts == FIRST_COLLECT
-    assert len(group_jobs(sc, fresh_db)) <= JOBS_PER_COLLECT
+    assert jobs <= JOBS_PER_COLLECT
+    (plan,) = plans
+    assert plan.count("FileScan text") == 1
+    assert plan.count("StructField(_source") == 1  # one from_json of the payload
+    assert "Join" not in plan
+
+
+def test_collect_appends_one_audit_file(spark, fresh_db, tmp_path):
+    before = len(spark.table("compliance_checks").inputFiles())
+    cli.cmd_collect(spark, write_spool(tmp_path / "payloads.jsonl"))
+    spark.catalog.refreshTable("compliance_checks")
+    assert len(spark.table("compliance_checks").inputFiles()) == before + 1
 
 
 def test_collect_audit_rows(spark, fresh_db, tmp_path):
@@ -174,6 +214,53 @@ def test_analytics_panels(spark, warehouse):
     assert {r.data_type: r["count"] for r in freq.collect()}["dataset"] == 6
 
 
+def test_analytics_job_count(spark, warehouse):
+    cli.cmd_analytics(spark)  # warm: the first read of a table lists its files
+    _, jobs = jobs_of(spark, lambda: [p.collect() for p in cli.cmd_analytics(spark)])
+    assert jobs <= JOBS_PER_ANALYTICS
+
+
+def test_status_job_count(spark, warehouse):
+    cli.cmd_status(spark).collect()
+    _, jobs = jobs_of(spark, lambda: cli.cmd_status(spark).collect())
+    assert jobs <= JOBS_PER_STATUS
+
+
+def test_export_job_count(spark, warehouse, tmp_path):
+    footer, jobs = jobs_of(spark, lambda: cli.cmd_export(
+        spark, "parquet", str(tmp_path / "exp"), "source_name = 'NYC Open Data'").collect())
+    assert [r.source_name for r in footer] == ["NYC Open Data"]
+    assert jobs <= JOBS_PER_EXPORT
+
+
+def exported_rows(path, fmt: str) -> int:
+    files = glob.glob(os.path.join(path, f"*.{fmt}"))
+    if fmt == "parquet":
+        return sum(pq.read_metadata(f).num_rows for f in files)
+    return sum(len(Path(f).read_text().splitlines()[1:]) for f in files)  # csv: minus header
+
+
+@pytest.mark.parametrize("fmt,where,want,rows", [
+    ("parquet", "1 = 0", [], 0),  # statically false: the write has no input
+    ("parquet", "size_bytes < 0", [], 0),  # a scan that matches nothing
+    ("csv", "source_name = 'SEC EDGAR'", ["SEC EDGAR"], 1),
+])
+def test_export_edge_cases(spark, warehouse, tmp_path, fmt, where, want, rows):
+    """The footer is right, and observing it on the write never waits
+    forever, whether or not the write sees a row."""
+    out, got = str(tmp_path / "exp"), []
+
+    def run():
+        got.append([r.source_name for r in cli.cmd_export(spark, fmt, out, where).collect()])
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(120)
+    assert not t.is_alive(), "export blocked"
+    assert got == [want]
+    assert exported_rows(out, fmt) == rows
+
+
 def test_export_and_attribution(spark, warehouse, tmp_path):
     out = tmp_path / "exp"
     attrib = cli.cmd_export(
@@ -189,6 +276,124 @@ def test_status_joins_compliance(spark, warehouse):
     assert rows["NYC Open Data"].compliant
     # latest check (with the API key run) shows Comtrade compliant too
     assert "UN Comtrade" in rows
+
+
+#: The reference's analytics and status SQL (``ethical_crawler.py:1039-1060,
+#: 1425-1451, 1468-1487``) over the catalog's parquet files, with this
+#: package's exactness rules: the average divides an exact decimal sum, and
+#: its shortest decimal form is rounded half-up, as Spark's ``round`` does.
+#: Timestamps compare as epoch microseconds.
+PANEL_SQL = {
+    "stats": """
+        SELECT source_name, COUNT(*) AS record_count,
+               COUNT(DISTINCT data_type) AS type_count,
+               CAST(ROUND(CAST(CAST(CAST(SUM(CAST(size_bytes AS DECIMAL(18,6))) AS DOUBLE)
+                   / COUNT(size_bytes) AS VARCHAR) AS DECIMAL(38,18)), 4) AS DOUBLE) AS avg_size,
+               epoch_us(MIN(ingested_at)) AS first_ingested,
+               epoch_us(MAX(ingested_at)) AS last_ingested
+        FROM dr GROUP BY source_name
+        ORDER BY record_count DESC, source_name NULLS FIRST""",
+    "freq": """
+        SELECT data_type, COUNT(*) AS count FROM dr GROUP BY data_type
+        ORDER BY count DESC, data_type NULLS FIRST""",
+    "status": """
+        WITH stats AS (
+            SELECT source_name, data_type, COUNT(*) AS count, MAX(ingested_at) AS last_ingested
+            FROM dr GROUP BY source_name, data_type),
+        per AS (
+            SELECT source_name, SUM(count) AS record_count,
+                   COUNT(DISTINCT data_type) AS type_count, MAX(last_ingested) AS last_ingested
+            FROM stats GROUP BY source_name),
+        latest AS (
+            SELECT source_name, len(issues) = 0 AS compliant, issues FROM cc c
+            WHERE check_time = (SELECT MAX(check_time) FROM cc c2
+                                WHERE c2.source_name = c.source_name))
+        SELECT source_name, record_count, type_count, epoch_us(last_ingested) AS last_ingested,
+               compliant, issues
+        FROM per LEFT JOIN latest USING (source_name)
+        ORDER BY record_count DESC, source_name NULLS FIRST""",
+}
+
+
+def duckdb_panels(spark) -> dict[str, tuple[list, list]]:
+    duckdb = pytest.importorskip("duckdb")
+    out = {}
+    with duckdb.connect() as con:
+        for view, table in (("dr", "data_records"), ("cc", "compliance_checks")):
+            spark.catalog.refreshTable(table)
+            files = [f.removeprefix("file:") for f in spark.table(table).inputFiles()]
+            con.execute(f"CREATE VIEW {view} AS SELECT * FROM read_parquet({files!r})")
+        for name, sql in PANEL_SQL.items():
+            cur = con.execute(sql)
+            out[name] = ([d[0] for d in cur.description], [tuple(r) for r in cur.fetchall()])
+    return out
+
+
+def spark_panel(df) -> tuple[list, list]:
+    def value(v):
+        if isinstance(v, datetime.datetime):  # collected in local time
+            return int(time.mktime(v.timetuple())) * 10**6 + v.microsecond
+        return v
+
+    return df.columns, [tuple(value(v) for v in r) for r in df.collect()]
+
+
+def test_panels_match_duckdb(spark, fresh_db, tmp_path):
+    """Both analytics panels and the status rows, row for row and in
+    order, against DuckDB running the reference's SQL. The catalog has
+    null sizes (SEC EDGAR has no size at all), a source with two data
+    types and one with a null type (appended through ``save_table``),
+    tied record and type counts, and an average on a half-point
+    (160001 / 160 = 1000.00625)."""
+    from ethical_data_ingestion_spark.schemas import DATA_RECORDS
+
+    lines = []
+    for i in range(164):
+        doc = {"_source": "NYC Open Data", "id": f"n{i}", "name": "n"}
+        if i < 160:
+            doc["size_bytes"] = 1001 if i == 0 else 1000
+        lines.append(doc)
+    lines += [{"_source": "SEC EDGAR", "id": f"s{i}", "name": "s"} for i in range(160)]
+    lines += [{"_source": "College Scorecard", "id": f"c{i}", "name": "c", "size_bytes": 3 * i + 7}
+              for i in range(160)]
+    lines += [{"_source": "UN Comtrade", "id": f"u{i}", "name": "u"} for i in range(3)]
+    spool = tmp_path / "panels.jsonl"
+    spool.write_text("\n".join(json.dumps(d) for d in lines))
+    cli.cmd_collect(spark, str(spool), api_keys={"College Scorecard"})
+    now = datetime.datetime.now(datetime.timezone.utc)
+    extra = [("SEC EDGAR", f"x{i}", "dataset") for i in range(4)]
+    extra += [("UN Comtrade", f"u{i}", None) for i in range(2)]
+    catalog.save_table(spark.createDataFrame([
+        {"source_name": s, "record_id": r, "title": "t", "data_type": t, "ingested_at": now,
+         **{f: None for f in DATA_RECORDS.names if f not in ("source_name", "record_id", "title",
+                                                            "data_type", "ingested_at")}}
+        for s, r, t in extra], DATA_RECORDS), "data_records", "append")
+
+    want = duckdb_panels(spark)
+    stats, freq = cli.cmd_analytics(spark)
+    assert spark_panel(stats) == want["stats"]
+    assert spark_panel(freq) == want["freq"]
+    assert spark_panel(cli.cmd_status(spark)) == want["status"]
+    # the cases the catalog was built to hold
+    nyc = want["stats"][1][0]
+    assert nyc[:4] == ("NYC Open Data", 164, 1, 1000.0063)
+    assert want["stats"][1][1][:4] == ("SEC EDGAR", 164, 2, None)
+    assert want["freq"][1][-1] == (None, 2)
+    assert [r[4] for r in want["status"][1]] == [True, True, True, False]
+
+
+def test_panels_of_empty_catalog(spark, fresh_db):
+    want = duckdb_panels(spark)  # over the empty files ``setup`` writes
+    stats, freq = cli.cmd_analytics(spark)
+    status = cli.cmd_status(spark)
+    assert (spark_panel(stats), spark_panel(freq), spark_panel(status)) == (
+        want["stats"], want["freq"], want["status"])
+    assert (stats.collect(), freq.collect(), status.collect()) == ([], [], [])
+    assert stats.columns == ["source_name", "record_count", "type_count", "avg_size",
+                             "first_ingested", "last_ingested"]
+    assert freq.columns == ["data_type", "count"]
+    assert status.columns == ["source_name", "record_count", "type_count", "last_ingested",
+                              "compliant", "issues"]
 
 
 def test_render_table_and_attribution():
@@ -213,7 +418,7 @@ def test_render_table_and_attribution():
 def test_cli_status_renders_footer(spark, tmp_path, capsys):
     import json as _json
 
-    from ethical_data_ingestion_spark import cli
+    from ethical_data_ingestion_spark import catalog, cli
 
     raw = tmp_path / "spool.jsonl"
     raw.write_text(

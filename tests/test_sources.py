@@ -120,7 +120,7 @@ def test_adapter_mapping(spark):
          ("NYC Open Data", json.dumps(epoch_payload)),
          ("SEC EDGAR", json.dumps({"id": "x"}))],
     )
-    recs = adapters.raw_to_records(raw, adapters.NYC_OPEN_DATA, "dataset")
+    recs = adapters.raw_to_records(raw, adapters.NYC_OPEN_DATA)
     rows = {r.record_id: r for r in recs.collect()}
     assert set(rows) == {"abc-123", "def-456"}  # SEC row filtered out
     r = rows["abc-123"]
@@ -157,10 +157,25 @@ def test_fetch_one_point_lookup(spark):
     assert adapters.fetch_one(raw, adapters.NYC_OPEN_DATA, "nope").count() == 0
 
 
-def test_union_sources(spark):
-    a = spark.createDataFrame([(1, "a")], "id int, v string")
-    b = spark.createDataFrame([(2, "b")], "id int, v string")
-    assert adapters.union_sources([a, b]).count() == 2
+def test_raw_to_records_maps_every_source(spark):
+    # one mapping for all sources: the per-source constants come from the
+    # registry, and the spool's shape (``_source`` inside the payload)
+    # maps the same as a (source_name, payload) frame
+    items = [
+        (s.name, json.dumps({"_source": s.name, "id": f"r{i}", "size_bytes": 7, "view_count": 5}))
+        for i, s in enumerate(adapters.ALL_SOURCES)
+    ] + [("Nowhere", json.dumps({"_source": "Nowhere", "id": "x"}))]
+    named = adapters.raw_to_records(adapters.make_raw_df(spark, items))
+    spool = adapters.raw_to_records(adapters.make_raw_df(spark, items).select("payload"))
+    rows = {r.source_name: r for r in named.collect()}
+    assert sorted(named.drop("ingested_at").collect()) == sorted(spool.drop("ingested_at").collect())
+    for s in adapters.ALL_SOURCES:
+        r = rows[s.name]
+        assert (r.data_type, r.license_info) == (s.data_type, s.data_license)
+        assert r.url == s.base_url + "/" + r.record_id
+        assert r.size_bytes == 7 and "Views: 5" in r.content_summary
+    # an unregistered source maps with null constants
+    assert (rows["Nowhere"].data_type, rows["Nowhere"].url) == (None, None)
 
 
 def test_xml_spool_roundtrip(spark, tmp_path):
@@ -172,7 +187,7 @@ def test_xml_spool_roundtrip(spark, tmp_path):
     p = tmp_path / "spool.xml"
     p.write_text(xml)
     raw = adapters.read_spool_xml(spark, str(p), "NYC Open Data")
-    recs = adapters.raw_to_records(raw, adapters.NYC_OPEN_DATA, "dataset")
+    recs = adapters.raw_to_records(raw, adapters.NYC_OPEN_DATA)
     rows = {r.record_id: r for r in recs.collect()}
     assert set(rows) == {"xml-1", "xml-2"}
     assert rows["xml-1"].title == "Air Quality"
