@@ -350,33 +350,35 @@ def main() -> None:
         lambda pdf: pdf, "id long, g long"
     ).count()
 
+    from ethical_data_ingestion_spark.streaming import pipeline  # noqa: PLC0415
+
     warm_src = scratch_dir("eds_warm_src_")
     spark.range(16).select(
         F.col("id"), F.timestamp_seconds(F.col("id")).alias("ts")
     ).coalesce(1).write.mode("overwrite").parquet(warm_src)
-    (
+    pipeline.drain(
         spark.readStream.schema("id long, ts timestamp")
         .parquet(warm_src)
         .withWatermark("ts", "0 seconds")
         .dropDuplicatesWithinWatermark(["id"])
         .writeStream.format("noop")
-        .option("checkpointLocation", scratch_dir("eds_warm_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
     )
 
     # Stage the streaming queries' source files once. spool() simulates an
     # ingest process having delivered time-ordered files; in production
     # those files exist before the query runs, so their one-time write is
-    # arrival staging, not query work. The cache inside _spooled_stream
-    # makes this the same staging the suite itself would do on first use —
-    # hoisted here so it isn't billed to whichever streaming query runs
-    # first.
+    # arrival staging, not query work. _spooled_stream keeps each spool's
+    # path as a session-store value, so this is the same staging the suite
+    # itself would do on first use — hoisted here so it isn't billed to
+    # whichever streaming query runs first. A budget release below evicts
+    # those values too, so stage_spools() runs again after each release.
     from ethical_data_ingestion_spark.queries import streaming_q as SQ
 
-    SQ._spooled_stream(spark, sf_dir, n_files=4, mfpt=2)
-    SQ._spooled_stream(spark, sf_dir, n_files=1, mfpt=None)
+    def stage_spools() -> None:
+        SQ._spooled_stream(spark, sf_dir, n_files=4, mfpt=2)
+        SQ._spooled_stream(spark, sf_dir, n_files=1, mfpt=None)
+
+    stage_spools()
 
     # Pre-resolve the fixture tables as temp views (io.preresolve_tables):
     # one file listing + relation setup per table for the whole suite,
@@ -464,6 +466,7 @@ def main() -> None:
                     transient_release(spark)
         if pinned_bytes(spark) > pin_budget:
             shared_release(spark)
+            stage_spools()
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     out = {

@@ -110,7 +110,9 @@ def cmd_collect(
     ``raw_path`` holds one JSON document per line with a ``_source`` field
     naming the producing source (what the rate-limited driver-side fetcher
     spools). Returns per-source compliant counts (sources with any), rows
-    inserted and rows quarantined.
+    inserted and rows quarantined: every line the write filters out,
+    including lines that are not JSON objects or name no registered
+    source (those fail the rate-limit rule and get no audit row).
 
     Like the reference's one visit per record, the spool is scanned and
     parsed once: one ``from_json`` per line, and the rules' inputs are
@@ -119,7 +121,7 @@ def cmd_collect(
     over the batch; the counts and each source's issue union are
     :class:`~pyspark.sql.Observation` metrics of it, and the audit rows
     (one per source in the spool) are built from them on the driver and
-    appended as one file. Lines naming no registered source are dropped.
+    appended as one file.
     """
     records = raw_to_records(spark.read.text(raw_path).select(F.col("value").alias("payload")))
     src = F.col("source_name")
@@ -131,12 +133,12 @@ def cmd_collect(
     ]
     flagged = with_issues(records.select("*", *context), standard_rules())
 
-    ok = F.size("issues") == 0
+    ok = F.coalesce(F.size("issues") == 0, F.lit(False))  # never null under ANSI
     names = [spec.name for spec in ALL_SOURCES]
     seen = Observation("collect")
     flagged = flagged.observe(
         seen,
-        F.count_if(~ok & src.isin(names)).alias("_quarantined"),
+        F.count_if(~ok).alias("_quarantined"),
         *[F.count_if(ok & (src == n)).alias(n) for n in names],
         # per source, the union of its distinct issue arrays (a few values)
         *[F.array_distinct(F.flatten(F.collect_set(F.when(src == n, F.col("issues")))))

@@ -37,12 +37,13 @@ call site at once:
 Select globally with the env var ``SPARK_GRAFT_MATERIALIZE`` or per call
 with ``mode=``.
 
-Pins reused across calls live in ONE session-bound store, ``_SHARED``:
-:func:`shared` (get-or-build), :func:`shared_publish` /
-:func:`shared_get` (a producer that always rebuilds) and
-:func:`shared_value` (scalars derived from an artifact). Pinned blocks
-never free themselves, so there are three release paths, each freeing
-through the mode's one routine (``_FREE``):
+Everything reused across calls lives in ONE session-bound store,
+``_SHARED``: :func:`shared` (get-or-build a pin), :func:`shared_publish`
+/ :func:`shared_get` (a producer that always rebuilds) and
+:func:`shared_value` (plain values: counts, spool paths, a bitmap's
+words). The package keeps no other module-global cache of session
+results. Pinned blocks never free themselves, so there are three
+release paths, each freeing through the mode's one routine (``_FREE``):
 
 * :func:`unpin`             — one loop round, once its successor is pinned;
 * :func:`shared_release`    — store entries; later callers rebuild;
@@ -52,10 +53,11 @@ through the mode's one routine (``_FREE``):
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
+
+from .session import scratch_dir
 
 _ENV_VAR = "SPARK_GRAFT_MATERIALIZE"
 _MODES = ("local", "disk", "checkpoint")
@@ -150,19 +152,14 @@ def materialize(df: DataFrame, mode: str | None = None) -> DataFrame:
         return pinned
     sc = df.sparkSession.sparkContext
     if sc.getCheckpointDir() is None:
-        # no durable dir configured: fall back to a local temp dir so the
+        # no durable dir configured: fall back to a scratch dir so the
         # mode stays runnable in tests; a cluster deployment must call
         # setCheckpointDir("hdfs://...") (or s3://) at session build.
-        # The fallback dir is removed at interpreter exit — reliable
-        # checkpoint files are not auto-cleaned by Spark otherwise
-        # (set spark.cleaner.referenceTracking.cleanCheckpoints on
-        # clusters to reclaim per-RDD files as they are GC'd).
-        import atexit
-        import shutil
-
-        d = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-        atexit.register(shutil.rmtree, d, True)
-        sc.setCheckpointDir(d)
+        # Scratch goes with the process (session.scratch_dir); reliable
+        # checkpoint files are not auto-cleaned by Spark otherwise (set
+        # spark.cleaner.referenceTracking.cleanCheckpoints on clusters to
+        # reclaim per-RDD files as they are GC'd).
+        sc.setCheckpointDir(scratch_dir("eds_rdd_ckpt_"))
     return df.checkpoint(eager=True)
 
 
@@ -225,8 +222,10 @@ def _live(key: tuple, spark) -> tuple | None:
 
 
 def shared_value(key: tuple, spark, compute):
-    """Session-scoped cache of a plain value (a scalar count, never data
-    rows): ``compute()`` runs at most once per (key, session)."""
+    """Session-scoped cache of a plain value — counts, spool paths, a
+    bitmap's words; never data rows: ``compute()`` runs at most once per
+    (key, session). :func:`shared_release` evicts values too, so a
+    released spool path is recomputed (re-spooled) on next use."""
     hit = _live(key, spark)
     if hit is not None:
         return hit[1]

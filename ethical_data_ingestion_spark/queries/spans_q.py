@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load_table
-from ..materialize import materialize, shared, unpin
+from ..materialize import materialize, shared, shared_value, unpin
 from ..operators.text import normalize_text, shingles_with_pos
 from ..registry import register
 
@@ -347,12 +347,6 @@ _SAG_ROUNDS = 7  # REPORT depth: the profile panels report window widths
                  # depth is NOT capped here: it adapts to the measured corpus
                  # via _sag_depth (round-9 verdict item 1).
 
-#: sf_dir -> doubling depth. Fixture parquet is immutable within a process
-#: (same assumption as io._SCHEMA_CACHE), so the one maxlen scan per corpus
-#: is paid once per session.
-_SAG_DEPTH: dict[str, int] = {}
-
-
 def _sag_depth(spark: SparkSession, sf_dir: str) -> int:
     """Doubling depth for the corpus at ``sf_dir``:
     ``max(_SAG_ROUNDS, ceil(log2(max document tokens)))``.
@@ -370,15 +364,21 @@ def _sag_depth(spark: SparkSession, sf_dir: str) -> int:
     LOUDLY (never silently agree on a shared wrong answer — the failure
     mode the old raise guarded against). ``tests/test_spans_longdoc.py``
     re-generates the oracles at the matching depth via the parametrized
-    builders below and proves the deep build on a >=4k-token corpus."""
-    if sf_dir not in _SAG_DEPTH:
+    builders below and proves the deep build on a >=4k-token corpus.
+
+    Fixture parquet is immutable within a process (same assumption as
+    ``io._SCHEMA_CACHE``), so the one maxlen scan per corpus is paid once
+    per session (a ``shared_value``)."""
+
+    def _depth() -> int:
         maxlen = (
             load_table(spark, sf_dir, "documents")
             .agg(F.max(F.size(F.split("text", " "))).alias("m"))
             .first()["m"]
         )
-        _SAG_DEPTH[sf_dir] = max(_SAG_ROUNDS, int(maxlen - 1).bit_length() if maxlen else 0)
-    return _SAG_DEPTH[sf_dir]
+        return max(_SAG_ROUNDS, int(maxlen - 1).bit_length() if maxlen else 0)
+
+    return shared_value(("sag_depth", sf_dir), spark, _depth)
 
 
 def _sag_nxt(cur: DataFrame, k: int) -> DataFrame:

@@ -14,8 +14,10 @@ streaming engine gets the DuckDB hash gate:
   the remaining set is deterministic and mirrors gaps-and-islands SQL.
 
 Spooling: events are re-written as range-partitioned files (chronological
-arrival order) under a temp dir per call — the micro-batch sequence is the
-point, not the copy.
+arrival order) under a scratch dir, once per session (the path is a
+``shared_value``) — the micro-batch sequence is the point, not the copy.
+Every drain goes through ``pipeline.drain``, which removes its checkpoint
+on return.
 """
 
 from __future__ import annotations
@@ -24,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load_table
+from ..materialize import materialize, shared, shared_publish, shared_value
 from ..registry import register
 from ..session import scratch_dir
 from ..streaming import pipeline as P
@@ -32,19 +35,17 @@ _SESSION_GAP_S = 1800
 _GUARD_S = _SESSION_GAP_S + 2  # gap + 2s guard band
 
 
-_SPOOL_CACHE: dict[tuple[str, int], str] = {}
-
-
 def _spooled_stream(
     spark: SparkSession, sf_dir: str, n_files: int, mfpt: int | None
 ) -> DataFrame:
-    key = (sf_dir, n_files)
-    if key not in _SPOOL_CACHE:
-        ev = load_table(spark, sf_dir, "events")
-        _SPOOL_CACHE[key] = P.spool(
-            ev, scratch_dir("eds_stream_src_"), n_files
-        )
-    return P.stream_from(spark, _SPOOL_CACHE[key], max_files_per_trigger=mfpt)
+    src = shared_value(
+        ("events_spool", sf_dir, n_files),
+        spark,
+        lambda: P.spool(
+            load_table(spark, sf_dir, "events"), scratch_dir("eds_stream_src_"), n_files
+        ),
+    )
+    return P.stream_from(spark, src, max_files_per_trigger=mfpt)
 
 
 @register(
@@ -77,8 +78,6 @@ def streaming_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebuilds — the _truth_pairs discipline) so the anomaly screen, which
     consumes the identical 1-hour tumbling table, stops re-draining the
     same stream (guide §2.4)."""
-    from ..materialize import shared_publish
-
     out = _drain_tumbling_1h(spark, sf_dir)
     shared_publish((*_TUMB_KEY, sf_dir), spark, out)
     return out.orderBy("window_start", "event_type")
@@ -102,8 +101,6 @@ def _drain_tumbling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _tumbling_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The published drained 1-hour window table, draining and publishing
     on first need (same shape as dedup_q._truth_pairs)."""
-    from ..materialize import shared
-
     return shared(
         (*_TUMB_KEY, sf_dir), spark, lambda: _drain_tumbling_1h(spark, sf_dir)
     )
@@ -488,44 +485,35 @@ def _anomaly_screen(win: DataFrame) -> DataFrame:
 # keeps. Near-dup classification stays in the batch twin (MinHash banding
 # is not a streaming-state shape); this covers the exact tier.
 
-_DOC_SPOOL_CACHE: dict[tuple, str] = {}
 _DOCS_DDL = "doc_id bigint, source string, text string"
 
 
 def _doc_batch_stream(spark: SparkSession, sf_dir: str, mfpt: int | None) -> DataFrame:
     from .dedup_q import _is_batch
 
-    key = (sf_dir,)
-    if key not in _DOC_SPOOL_CACHE:
+    def _spool() -> str:
         docs = load_table(spark, sf_dir, "documents")
         batch = docs.filter(_is_batch()).select("doc_id", "source", "text")
-        _DOC_SPOOL_CACHE[key] = P.spool(
+        return P.spool(
             batch, scratch_dir("eds_doc_stream_src_"), n_files=4, ts_col="doc_id"
         )
+
     return P.stream_from(
-        spark, _DOC_SPOOL_CACHE[key], schema_ddl=_DOCS_DDL,
-        max_files_per_trigger=mfpt,
+        spark, shared_value(("doc_spool", sf_dir), spark, _spool),
+        schema_ddl=_DOCS_DDL, max_files_per_trigger=mfpt,
     )
 
 
-def _drain_rows(spark: SparkSession, stream: DataFrame, ckpt_prefix: str) -> DataFrame:
+def _drain_rows(stream: DataFrame) -> DataFrame:
     """ONE foreachBatch pass that drains ``stream`` and returns the pinned
     union of its micro-batches; backs the session-shared drained-rows
     artifacts below."""
-    from ..materialize import materialize
-
     batches: list[DataFrame] = []
 
     def _sink(bdf: DataFrame, _bid: int) -> None:
         batches.append(materialize(bdf))
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", scratch_dir(ckpt_prefix))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    P.drain(stream.writeStream.foreachBatch(_sink))
     if not batches:
         raise RuntimeError("drain saw no micro-batches")
     rows = batches[0]
@@ -542,13 +530,10 @@ def _drained_doc_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     guide §2.4/§2.6). Batch boundaries cannot change any consumer panel
     (pinned by tests/test_streaming_multiplex.py against the real
     single-drain twins)."""
-    from ..materialize import shared
 
     def _build() -> DataFrame:
         with P.state_partitions(spark, 4):
-            return _drain_rows(
-                spark, _doc_batch_stream(spark, sf_dir, mfpt=2), "eds_mux_ckpt_"
-            )
+            return _drain_rows(_doc_batch_stream(spark, sf_dir, mfpt=2))
 
     return shared(("drained_doc_rows", sf_dir), spark, _build)
 
@@ -559,7 +544,6 @@ def _doc_fp_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     continuously; previously re-derived per run by BOTH the incremental-
     dedup classifier and the curation gate's duplicate screen (guide
     §2.4)."""
-    from ..materialize import shared
     from ..operators import text as T
     from .dedup_q import _is_batch
 
@@ -722,15 +706,10 @@ def streaming_topk_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _drained_event_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-shared drained event rows: one foreachBatch pass over the
     spooled events stream, published as a pinned artifact."""
-    from ..materialize import shared
 
     def _build() -> DataFrame:
         with P.state_partitions(spark, 4):
-            return _drain_rows(
-                spark,
-                _spooled_stream(spark, sf_dir, n_files=4, mfpt=2),
-                "eds_muxw_ckpt_",
-            )
+            return _drain_rows(_spooled_stream(spark, sf_dir, n_files=4, mfpt=2))
 
     return shared(("drained_event_rows", sf_dir), spark, _build)
 
@@ -925,9 +904,6 @@ def _quarantine_final(out: DataFrame) -> DataFrame:
 _LATE_DELAY_MIN = 45
 _LATE_MOD = 23
 
-_LATE_SPOOL_CACHE: dict[str, str] = {}
-
-
 def _late_spool(spark: SparkSession, sf_dir: str) -> str:
     """Spool the event stream as 3 chronological time-range files PLUS a
     final out-of-order file carrying the deterministic late subset
@@ -936,11 +912,13 @@ def _late_spool(spark: SparkSession, sf_dir: str) -> str:
     arithmetic on epoch micros (NOT ``repartitionByRange``'s sampled
     boundaries) so the DuckDB mirror can re-derive the file→batch
     assignment row for row."""
-    hit = _LATE_SPOOL_CACHE.get(sf_dir)
-    if hit is not None:
-        return hit
+    return shared_value(("late_spool", sf_dir), spark, lambda: _write_late_spool(spark, sf_dir))
+
+
+def _write_late_spool(spark: SparkSession, sf_dir: str) -> str:
     import glob
     import os
+    import shutil
 
     ev = load_table(spark, sf_dir, "events")
     b = ev.agg(F.min("ts").alias("mn"), F.max("ts").alias("mx")).collect()[0]
@@ -990,7 +968,7 @@ def _late_spool(spark: SparkSession, sf_dir: str) -> str:
     base = os.path.getmtime(written[0])
     for k, dst in enumerate(written):
         os.utime(dst, (base + 5 * k, base + 5 * k))
-    _LATE_SPOOL_CACHE[sf_dir] = out_dir
+    shutil.rmtree(stage_dir, ignore_errors=True)
     return out_dir
 
 
@@ -1152,7 +1130,6 @@ def streaming_knn_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _knn_serving_drain(
     spark: SparkSession, sf_dir: str, mfpt: int | None
 ) -> DataFrame:
-    from ..materialize import shared
     from ..operators import similarity as S
     from .similarity_q import _ann_is_new
 
@@ -1170,18 +1147,20 @@ def _knn_serving_drain(
         spark,
         lambda: S.lsh_base_buckets(index_vecs, "vec_id", planes),
     )
-    key = ("emb_delta", sf_dir)
-    if key not in _SPOOL_CACHE:
-        _SPOOL_CACHE[key] = P.spool(
+    src = shared_value(
+        ("emb_delta_spool", sf_dir),
+        spark,
+        lambda: P.spool(
             emb.filter(_ann_is_new()),
             scratch_dir("eds_probe_src_"),
             n_files=4,
             ts_col="vec_id",
-        )
+        ),
+    )
     with P.state_partitions(spark, 4):
         probes = P.stream_from(
             spark,
-            _SPOOL_CACHE[key],
+            src,
             schema_ddl="vec_id long, embedding array<float>, label int",
             max_files_per_trigger=mfpt,
         ).select(
@@ -1258,13 +1237,6 @@ _SGATE_M = 131068  # bits; 62 * 2114
 _SGATE_K = 5
 _SGATE_WORD = 62
 
-#: keyed on (sf_dir, corpus-file mtime) — ADVICE r9: a plain sf_dir key
-#: served a STALE bitmap to a long-lived process that rewrote the corpus
-#: at the same path (or appended benchmark docs between sessions); the
-#: mtime in the key makes any rewrite a cache miss.
-_SGATE_BLOOM_CACHE: dict[tuple, list[int]] = {}
-
-
 def _corpus_version(sf_dir: str) -> float:
     """Cheap corpus-snapshot tag: mtime of documents.parquet (works for
     both single-file fixtures and directory-style Spark writes, whose
@@ -1279,15 +1251,24 @@ def _corpus_version(sf_dir: str) -> float:
 
 def _sgate_bloom_words(spark: SparkSession, sf_dir: str) -> list[int]:
     """Dense 2114-long word list of the benchmark 8-gram Bloom bitmap —
-    built ONCE per (process, corpus snapshot) from the static benchmark
+    built ONCE per (session, corpus snapshot) from the static benchmark
     source and embedded as an array literal in the streaming plan (16 KB
     — the constant-size decontamination artifact, same scale argument as
     ``bloom_decontam_stats``). The collect is bounded by the bitmap
-    geometry, never by benchmark size."""
-    key = (sf_dir, _corpus_version(sf_dir))
-    hit = _SGATE_BLOOM_CACHE.get(key)
-    if hit is not None:
-        return hit
+    geometry, never by benchmark size.
+
+    Keyed on the corpus-file mtime too (ADVICE r9): a plain sf_dir key
+    served a STALE bitmap to a long-lived process that rewrote the corpus
+    at the same path (or appended benchmark docs between sessions); the
+    mtime in the key makes any rewrite a cache miss."""
+    return shared_value(
+        ("sgate_bloom", sf_dir, _corpus_version(sf_dir)),
+        spark,
+        lambda: _build_sgate_bloom(spark, sf_dir),
+    )
+
+
+def _build_sgate_bloom(spark: SparkSession, sf_dir: str) -> list[int]:
     from ..operators.text import shingles
     from .corpus_q import _BENCH_SOURCE, _DECON_K
 
@@ -1328,7 +1309,6 @@ def _sgate_bloom_words(spark: SparkSession, sf_dir: str) -> list[int]:
     dense = [0] * (_SGATE_M // _SGATE_WORD)
     for r in words:
         dense[r.w] = r.bits
-    _SGATE_BLOOM_CACHE[key] = dense
     return dense
 
 

@@ -15,37 +15,44 @@ scale-ready execution:
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import SparkSession
+
+
+#: the per-process scratch root, made by the first :func:`scratch_dir` call
+_root: str | None = None
 
 
 def scratch_dir(prefix: str) -> str:
     """Create a scratch directory for ephemeral engine state (streaming
     checkpoints, spooled stream sources, shuffle spill).
 
-    Prefers RAM-backed ``/dev/shm`` over ``/tmp``: on this harness /tmp is
-    on the root virtio disk, and streaming state-store commits are
-    fsync-heavy enough that disk latency dominates (and jitters) their
-    wall-clock. On a real cluster these locations are HDFS/S3 (checkpoints)
-    and local SSD (spill) — RAM-tmpfs is the single-box analog, not a
-    semantic change. Override with ``$SPARK_GRAFT_SCRATCH``."""
-    base = os.environ.get("SPARK_GRAFT_SCRATCH")
-    if base is None and os.path.isdir("/dev/shm"):
-        base = "/dev/shm/eds_scratch"
-    if base is not None:
-        os.makedirs(base, exist_ok=True)
-    d = tempfile.mkdtemp(prefix=prefix, dir=base)
-    # scratch is ephemeral BY CONTRACT (streaming checkpoints/spools live
-    # only as long as their queries, i.e. this process) — reclaim at exit
-    # so long-lived hosts and repeated bench runs don't accumulate
-    # hundreds of dead dirs in the RAM tmpfs
-    import atexit
-    import shutil
+    Every directory lands under ONE per-process root, created on first
+    use and removed by one ``atexit`` hook: scratch lives only as long as
+    this process, and a long-lived session adds no exit hook per call.
+    Callers that finish with a directory earlier remove it themselves
+    (``pipeline.drain`` removes its checkpoint on return).
 
-    atexit.register(shutil.rmtree, d, True)
-    return d
+    The root prefers RAM-backed ``/dev/shm`` over ``/tmp``: where /tmp
+    is on disk, streaming state-store commits are fsync-heavy enough that
+    disk latency dominates (and jitters) their wall-clock. On a real cluster these locations are
+    HDFS/S3 (checkpoints) and local SSD (spill) — RAM-tmpfs is the
+    single-box analog, not a semantic change. Override the parent of the
+    root with ``$SPARK_GRAFT_SCRATCH`` (read once, on first use)."""
+    global _root
+    if _root is None:
+        base = os.environ.get("SPARK_GRAFT_SCRATCH")
+        if base is None and os.path.isdir("/dev/shm"):
+            base = "/dev/shm/eds_scratch"
+        if base is not None:
+            os.makedirs(base, exist_ok=True)
+        _root = tempfile.mkdtemp(prefix="eds_proc_", dir=base)
+        atexit.register(shutil.rmtree, _root, True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_root)
 
 
 def get_spark(

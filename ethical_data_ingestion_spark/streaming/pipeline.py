@@ -23,17 +23,19 @@ parquet/foreachBatch paths.
 from __future__ import annotations
 
 import itertools
-from ..session import scratch_dir
+import shutil
 from collections.abc import Iterator
 from contextlib import contextmanager
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..materialize import materialize
 from ..operators import windows as W
+from ..session import scratch_dir
 
 #: Events schema as spooled by :func:`spool` (ts kept NTZ end-to-end; the
 #: fixtures are isAdjustedToUTC=false and NTZ windows are tz-independent).
@@ -162,35 +164,49 @@ def stream_from(
     return reader.parquet(src_dir)
 
 
+def drain(writer: DataStreamWriter) -> None:
+    """Run ``writer`` as an availableNow query to completion: the one
+    place a package drain starts, waits for and cleans up after a
+    streaming query. The query gets a fresh checkpoint under
+    ``session.scratch_dir``; a failure stops it (the exception
+    propagates), and the checkpoint is removed on return either way —
+    no package drain resumes an earlier one, so keeping it would only
+    grow a long-lived session's scratch. Queries that DO resume
+    (periodic catch-up over a durable checkpoint) own their checkpoint
+    and start their own query."""
+    ckpt = scratch_dir("eds_ckpt_")
+    try:
+        q = writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
+        try:
+            q.awaitTermination()
+        finally:
+            q.stop()  # a no-op once the drain has finished
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+
+
 def run_available_now(
     sdf: DataFrame, output_mode: str = "append", name: str | None = None
 ) -> DataFrame:
     """Drain the stream to completion (``trigger(availableNow)``) into a
     memory sink and return the result as a batch DataFrame. availableNow
-    processes the backlog in rate-limited micro-batches then stops — the
-    pattern for periodic catch-up runs of a continuous pipeline."""
+    processes the backlog in rate-limited micro-batches then stops; each
+    call starts from a fresh checkpoint (:func:`drain`)."""
     name = name or f"eds_stream_{next(_uniq)}"
-    ckpt = scratch_dir("eds_ckpt_")
-    q = (
-        sdf.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     spark = sdf.sparkSession
-    # detach the result from the memory sink (checkpoint = one stable
-    # copy in block storage) and drop the sink view, so repeated drains
-    # in one session don't accumulate sink tables. The sink's MemoryPlan
-    # cannot be re-instanced, so a self-join over it fails analysis
-    # unless its columns are re-aliased first; a ``local`` pin hides that
-    # behind a fresh LogicalRDD, but a ``disk`` pin keeps the plan.
-    sink = spark.table(name)
-    out = materialize(sink.toDF(*sink.columns))
-    spark.catalog.dropTempView(name)
-    return out
+    try:
+        drain(sdf.writeStream.format("memory").queryName(name).outputMode(output_mode))
+        # detach the result from the memory sink (checkpoint = one stable
+        # copy in block storage); the sink view is dropped below, so
+        # repeated or failed drains in one session leave no sink tables.
+        # The sink's MemoryPlan cannot be re-instanced, so a self-join
+        # over it fails analysis unless its columns are re-aliased first;
+        # a ``local`` pin hides that behind a fresh LogicalRDD, but a
+        # ``disk`` pin keeps the plan.
+        sink = spark.table(name)
+        return materialize(sink.toDF(*sink.columns))
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 def tumbling_stream(
@@ -441,14 +457,7 @@ def audit_sink(stream: DataFrame, out_dir: str) -> "DataFrame":
             .parquet(out_dir)
         )
 
-    ckpt = scratch_dir("eds_audit_ckpt_")
-    q = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(write_batch))
     return stream
 
 
@@ -522,14 +531,7 @@ def incremental_rollup(
         finally:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
 
-    ckpt = scratch_dir("eds_rollup_ckpt_")
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(merge_batch))
     return out_dir
 
 

@@ -185,6 +185,20 @@ def test_collect_audit_rows(spark, fresh_db, tmp_path):
         assert r.recommendations == [], name
 
 
+def test_collect_counts_unparseable_and_unregistered_lines(spark, fresh_db, tmp_path):
+    spool = tmp_path / "mixed.jsonl"
+    spool.write_text("\n".join([
+        json.dumps(PAYLOADS[0]),
+        "not json",
+        json.dumps({**PAYLOADS[1], "_source": "Nowhere", "id": "nowhere-1"}),
+    ]))
+    assert cli.cmd_collect(spark, str(spool)) == {
+        "NYC Open Data": 1, "_inserted": 1, "_quarantined": 2}
+    assert [r.record_id for r in spark.table("data_records").collect()] == ["nyc-0"]
+    rows = spark.table("compliance_checks").collect()
+    assert [(r.source_name, r.issues) for r in rows] == [("NYC Open Data", [])]
+
+
 def test_collect_idempotent(spark, warehouse, tmp_path):
     counts = cli.cmd_collect(spark, write_spool(tmp_path / "again.jsonl"))
     assert counts["_inserted"] == 0
