@@ -6,15 +6,21 @@ the serving job that mounts the index is never the job that built it. This
 module is that lifecycle seam:
 
 * :func:`save_chunk_ann_index` — write the session-pinned chunk index
-  (base vectors + exploded LSH bucket table) plus a ``meta.json`` carrying
-  the plane GEOMETRY (dim / n_tables / n_bits / seed). The hyperplanes are
-  deterministic from the geometry (``operators.similarity.hyperplanes`` is
-  md5-seeded), so persisting four integers-and-a-string reconstructs the
-  exact planes in any process — no float arrays to version.
+  (base vectors with their norms ``(ckey, _bv, _bn)`` + the exploded LSH
+  bucket table) plus a ``meta.json`` carrying the plane GEOMETRY (dim /
+  n_tables / n_bits / seed) and the two tables' schemas. The hyperplanes
+  are deterministic from the geometry (``operators.similarity.hyperplanes``
+  is md5-seeded), so persisting four integers-and-a-string reconstructs
+  the exact planes in any process — no float arrays to version.
 * :func:`load_chunk_ann_index` — mount the artifacts in ANY SparkSession
-  (a fresh driver-style one included) and rebuild the planes from meta.
-* :func:`serve_chunk_ann_from_disk` — run the standard serving join
-  (``embed_q._chunk_ann_serve``) off the mounted index.
+  (a fresh driver-style one included) with the schemas from meta, so the
+  mount runs no schema-inference job, and rebuild the planes from meta.
+  An index written before meta carried the schemas (and the base its
+  ``_bn`` column) does not mount: rebuild it with
+  :func:`save_chunk_ann_index`.
+* :func:`serve_chunk_ann_from_disk` — run the serving kernel
+  (``operators.similarity.lsh_topk`` through ``embed_q._chunk_ann_serve``)
+  off the mounted index.
 
 ``tests/test_ann_cold_start.py`` pins the failover story end-to-end: a
 SUBPROCESS with a brand-new plain SparkSession loads the index written
@@ -34,6 +40,7 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _META = "meta.json"
 _BASE = "base"
@@ -57,6 +64,8 @@ def save_chunk_ann_index(
         "n_bits": len(planes[0]),
         "seed": "edi",
         "sf_dir": sf_dir,
+        "base_schema": base.schema.jsonValue(),
+        "buckets_schema": b_buckets.schema.jsonValue(),
     }
     with open(os.path.join(index_dir, _META), "w") as fh:
         json.dump(meta, fh)
@@ -78,8 +87,10 @@ def load_chunk_ann_index(
     planes = S.hyperplanes(
         meta["dim"], meta["n_tables"], meta["n_bits"], seed=meta["seed"]
     )
-    base = spark.read.parquet(f"{index_dir}/{_BASE}")
-    buckets = spark.read.parquet(f"{index_dir}/{_BUCKETS}")
+    read = lambda name, key: spark.read.schema(  # noqa: E731
+        StructType.fromJson(meta[key])).parquet(f"{index_dir}/{name}")
+    base = read(_BASE, "base_schema")
+    buckets = read(_BUCKETS, "buckets_schema")
     return base, buckets, planes, meta
 
 
@@ -87,8 +98,8 @@ def serve_chunk_ann_from_disk(
     spark: SparkSession, sf_dir: str, index_dir: str
 ) -> DataFrame:
     """The cold-start serving path: mount the on-disk index and run the
-    standard candidate-join + exact-rescore serve — same output contract
-    as the session-pinned ``chunk_embed_topk_ann``."""
+    serving kernel over it — same output contract as the session-pinned
+    ``chunk_embed_topk_ann``."""
     from .queries.embed_q import _chunk_ann_serve
 
     base, buckets, planes, _ = load_chunk_ann_index(spark, index_dir)

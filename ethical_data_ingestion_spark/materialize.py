@@ -53,11 +53,12 @@ release paths, each freeing through the mode's one routine (``_FREE``):
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
-from .session import scratch_dir
+from .session import in_scratch, scratch_dir
 
 _ENV_VAR = "SPARK_GRAFT_MATERIALIZE"
 _MODES = ("local", "disk", "checkpoint")
@@ -224,8 +225,8 @@ def _live(key: tuple, spark) -> tuple | None:
 def shared_value(key: tuple, spark, compute):
     """Session-scoped cache of a plain value — counts, spool paths, a
     bitmap's words; never data rows: ``compute()`` runs at most once per
-    (key, session). :func:`shared_release` evicts values too, so a
-    released spool path is recomputed (re-spooled) on next use."""
+    (key, session). :func:`shared_release` evicts values too, and removes
+    a released spool dir, so the spool is rewritten on next use."""
     hit = _live(key, spark)
     if hit is not None:
         return hit[1]
@@ -325,8 +326,9 @@ def pinned_bytes(spark) -> int:
 
 
 def shared_release(spark, predicate=None) -> int:
-    """Evict this session's store entries and FREE their pins' blocks.
-    ``predicate(key)`` selects entries; None releases every entry of
+    """Evict this session's store entries and FREE their pins' blocks;
+    a released value that is a directory under the scratch root (a
+    spool) is removed. ``predicate(key)`` selects entries; None releases every entry of
     this session. Returns the number of entries evicted. The caller
     guarantees no consumer touches a released DataFrame again (a local
     pin's lineage is truncated, so it cannot be recomputed); later
@@ -340,5 +342,7 @@ def shared_release(spark, predicate=None) -> int:
         _, value, owned = _SHARED.pop(k)
         if isinstance(value, DataFrame):
             free(value, owned)
+        elif isinstance(value, str) and in_scratch(value):
+            shutil.rmtree(value, ignore_errors=True)  # a spool dir
         n += 1
     return n

@@ -118,9 +118,9 @@ def embedding_pipeline_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _searchable_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedded docs restricted to non-zero signatures: a zero vector is
-    unsearchable under cosine (Spark would score 0/0 = NaN, which sorts
-    ABOVE every real score under a descending order, while the oracle's
-    counts CTE simply has no rows for it) — filtered on BOTH sides, the
+    unsearchable under cosine (Spark's 0/0 is NULL, or an error under
+    ANSI mode, while the oracle's counts CTE simply has no rows for
+    it) — filtered on BOTH sides, the
     same rule ``chunk_embed_topk`` applies to chunks (mirror: HAVING
     Σc² > 0). The shipped fixtures contain no such doc; the filter keeps
     the pair correct when the corpus changes."""
@@ -232,39 +232,30 @@ def embed_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checked against a DuckDB mirror of the entire deterministic
     pipeline (see :func:`_embed_lsh_oracle`).
 
-    The base-side bucket index (the Arrow-batched corpus bucketization,
-    the dominant per-call cost) is pinned session-wide via ``shared`` —
-    same pattern as ``_chunk_index``/``similarity_q._nsw_graph`` — so
-    repeat probes re-use the index blocks instead of re-bucketizing the
-    corpus (round-7 verdict item 4)."""
-    # pinned searchable base: the corpus-wide norm^2 filter + the
-    # array<double> cast run once per session, not per probe batch
+    The index — the searchable base with its norms and the base-side
+    bucket table (the Arrow-batched corpus bucketization, the dominant
+    per-call cost) — is pinned session-wide via ``shared``, so repeat
+    probes re-use the index blocks instead of re-bucketizing the corpus;
+    the probes are the pinned base's first rows, bucketized on the driver
+    (:func:`~..operators.similarity.lsh_topk`)."""
+    planes = S.hyperplanes(_DIM, 8, 4)
     base = shared(
         ("embed_lsh_base", sf_dir, _DIM),
         spark,
-        lambda: _searchable_docs(spark, sf_dir).select(
-            F.col("doc_id").alias("vec_id"),
-            S.as_double(F.col("embedding")).alias("embedding"),
+        lambda: S.lsh_vectors(
+            _searchable_docs(spark, sf_dir).withColumnRenamed("doc_id", "vec_id"),
+            "vec_id", "embedding",
         ),
     )
-    queries = base.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    planes = S.hyperplanes(_DIM, 8, 4)
     b_buckets = shared(
         ("embed_lsh_buckets", sf_dir, _DIM, 8, 4),
         spark,
-        lambda: S.lsh_base_buckets(
-            base.select("vec_id", F.col("embedding").alias("_bv")),
-            "vec_id",
-            planes,
-        ),
+        lambda: S.lsh_base_buckets(base, "vec_id", planes),
     )
-    out = S.knn_lsh(
-        base, queries, k=_K, dim=_DIM, n_tables=8, n_bits=4,
-        b_buckets=b_buckets,
+    queries = base.filter(F.col("vec_id") < _N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("_bv").alias("embedding")
     )
-    return out.withColumn("rank", F.col("rank").cast("int"))
+    return S.knn_lsh(base, queries, k=_K, index=(base, b_buckets, planes))
 
 
 # ---------------------------------------------------------------------------
@@ -1223,23 +1214,20 @@ def _mmr_select_joins(cands: DataFrame) -> DataFrame:
 
 
 def _chunk_lsh_buckets(spark: SparkSession, sf_dir: str):
-    """Session-pinned (ckey, table, bucket) LSH signature index over the
-    chunk table — built once, served to every probe batch (and the
-    recall test) like embed_lsh_buckets / the NSW graph."""
+    """Session-pinned chunk LSH index: (base, buckets, planes), where base
+    is (ckey, _bv, _bn) and buckets the (ckey, table, bucket) signature
+    table — built once, served to every probe batch (and the recall
+    test) like embed_lsh_buckets / the NSW graph."""
     planes = S.hyperplanes(_DIM, 8, 4)
     base = shared(
         ("chunk_lsh_base", sf_dir, _DIM),
         spark,
-        lambda: _chunk_index(spark, sf_dir).select(
-            "doc_id", "ckey", S.as_double(F.col("embedding")).alias("_bv")
-        ),
+        lambda: S.lsh_vectors(_chunk_index(spark, sf_dir), "ckey", "embedding"),
     )
     b_buckets = shared(
         ("chunk_lsh_buckets", sf_dir, _DIM, 8, 4),
         spark,
-        lambda: S.lsh_base_buckets(
-            base.select("ckey", "_bv"), "ckey", planes
-        ),
+        lambda: S.lsh_base_buckets(base, "ckey", planes),
     )
     return base, b_buckets, planes
 
@@ -1296,30 +1284,19 @@ def chunk_embed_topk_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     make the approximate result list itself hash-checkable against the
     shared DuckDB LSH-pipeline mirror.
 
-    r13 (guide §2.4): the exact-rescored candidate table is PUBLISHED per
-    run (producer always rebuilds — the _truth_pairs discipline) so the
-    ANN-served MMR re-ranker, whose pool is the identical
-    candidates-rescore, stops re-running the bucket join."""
-    from ..materialize import shared_publish
-
-    base, b_buckets, planes = _chunk_lsh_buckets(spark, sf_dir)
-    scored = shared_publish(
-        (*_ANN_SCORED_KEY, sf_dir), spark,
-        _ann_scored(spark, sf_dir, base, b_buckets, planes),
-    )
-    return _ann_rank_cut(scored)
+    One serving kernel (:func:`~..operators.similarity.lsh_topk`) over
+    the session-pinned index: driver-bucketized probes, a grouped top-k
+    over each probe's distinct candidates, nothing pinned per call."""
+    return _chunk_ann_serve(spark, sf_dir, *_chunk_lsh_buckets(spark, sf_dir))
 
 
-_ANN_SCORED_KEY = ("rag_ann_scored", _DIM)
-
-
-def _ann_scored(
-    spark: SparkSession, sf_dir: str, base, b_buckets, planes
+def _chunk_ann_topk(
+    spark: SparkSession, sf_dir: str, base, b_buckets, planes, k: int
 ) -> DataFrame:
-    """(query_id(+QOFF), ckey, cos): bucket-colliding chunk candidates for
-    the RAG probe set, exact-rescored, own-document chunks excluded — the
-    table both ANN-served panels cut their ranks from."""
-    qd = (
+    """Kernel rows (query_id + _CHUNK_QOFF, ckey, cos, rank): the top-``k``
+    chunks per RAG probe document over an arbitrary (base, bucket-index,
+    planes) index, own-document chunks excluded before rescoring."""
+    probes = (
         _searchable_docs(spark, sf_dir)
         .filter(F.col("doc_id") < _RAG_QUERIES)
         .select(
@@ -1327,66 +1304,26 @@ def _ann_scored(
             S.as_double(F.col("embedding")).alias("_qv"),
         )
     )
-    cand = S.lsh_candidates(
-        base.select("ckey", "_bv"),
-        qd,
-        "ckey",
-        "query_id",
-        planes,
-        base_vec="_bv",
-        query_vec="_qv",
-        b_buckets=b_buckets,
-    ).filter(
-        F.expr(f"ckey div {_CHUNK_KEYMUL}")
-        != (F.col("query_id") - F.lit(_CHUNK_QOFF))
-    )
-    return (
-        cand.join(F.broadcast(qd), "query_id")
-        .join(base.select("ckey", "_bv"), "ckey")
-        .select(
-            "query_id",
-            "ckey",
-            F.round(S.cosine(F.col("_qv"), F.col("_bv")), 6).alias("cos"),
-        )
-    )
-
-
-def _ann_scored_published(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The published rescored-candidate table, building and publishing on
-    first need (so consumers stay standalone-safe)."""
-    return shared(
-        (*_ANN_SCORED_KEY, sf_dir), spark,
-        lambda: _ann_scored(spark, sf_dir, *_chunk_lsh_buckets(spark, sf_dir)),
-    )
-
-
-def _ann_rank_cut(scored: DataFrame) -> DataFrame:
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.col("ckey"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _RAG_K)
-        .select(
-            (F.col("query_id") - F.lit(_CHUNK_QOFF)).cast("long").alias(
-                "query_id"
-            ),
-            F.expr(f"ckey div {_CHUNK_KEYMUL}").alias("doc_id"),
-            (F.col("ckey") % _CHUNK_KEYMUL).cast("long").alias("chunk_idx"),
-            "cos",
-            F.col("rank").cast("int").alias("rank"),
-        )
-        .orderBy("query_id", "rank")
+    return S.lsh_topk(
+        S.lsh_probes(spark, probes, planes), base, b_buckets, "ckey", k,
+        keep=F.expr(f"ckey div {_CHUNK_KEYMUL} <> query_id - {_CHUNK_QOFF}"),
     )
 
 
 def _chunk_ann_serve(
     spark: SparkSession, sf_dir: str, base, b_buckets, planes
 ) -> DataFrame:
-    """The serving join over an arbitrary (base, bucket-index, planes)
-    triple — lets the persistence test serve from a parquet-reloaded
-    index and prove it answers identically to the freshly built one."""
-    return _ann_rank_cut(_ann_scored(spark, sf_dir, base, b_buckets, planes))
+    """`chunk_embed_topk_ann`'s rows over an arbitrary index — the
+    session-pinned one, or one mounted from disk (``ann_store``)."""
+    return _chunk_ann_topk(
+        spark, sf_dir, base, b_buckets, planes, _RAG_K
+    ).selectExpr(
+        f"query_id - {_CHUNK_QOFF} AS query_id",
+        f"ckey div {_CHUNK_KEYMUL} AS doc_id",
+        f"ckey % {_CHUNK_KEYMUL} AS chunk_idx",
+        "cos",
+        "rank",
+    )
 
 
 def _mmr_ann_oracle() -> str:
@@ -1421,31 +1358,12 @@ def mmr_diversified_topk_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned index -> bucket candidates -> exact re-score -> diversified
     prompt assembly, every stage |queries|-bounded.
 
-    r13 (guide §2.4): the re-rank pool reads the PUBLISHED rescored
-    candidate table (`_ann_scored_published` — the identical table
-    `chunk_embed_topk_ann` rebuilds and republishes every run) instead
-    of re-running the bucket join + rescore."""
-    cemb = _chunk_index(spark, sf_dir)
-    from pyspark.sql import Window
-
-    wq = Window.partitionBy("query_id")
-    pool = (
-        _ann_scored_published(spark, sf_dir)
-        .select(
-            (F.col("query_id") - F.lit(_CHUNK_QOFF)).cast("long").alias(
-                "query_id"
-            ),
-            "ckey",
-            F.col("cos").alias("rel"),
-        )
-        .withColumn(
-            "rank",
-            F.row_number().over(wq.orderBy(F.desc("rel"), F.col("ckey"))),
-        )
-        .filter(F.col("rank") <= _MMR_N)
-        .drop("rank")
-    )
+    The re-rank pool is the serving kernel's top-{_MMR_N} per query
+    (:func:`_chunk_ann_topk` over the session-pinned index)."""
+    pool = _chunk_ann_topk(
+        spark, sf_dir, *_chunk_lsh_buckets(spark, sf_dir), _MMR_N
+    ).selectExpr(f"query_id - {_CHUNK_QOFF} AS query_id", "ckey", "cos AS rel")
     cands = pool.join(
-        cemb.select("ckey", "embedding", "n2"), "ckey"
+        _chunk_index(spark, sf_dir).select("ckey", "embedding", "n2"), "ckey"
     ).select("query_id", "ckey", "embedding", "n2", "rel")
     return _mmr_select(cands)

@@ -207,11 +207,7 @@ def _sem_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     # probe buckets are DRIVER-COMPILED from the pinned probe vectors
     # (bounded collect feeding a local relation — the literal-probe-terms
     # pattern): no Python-worker round-trip, no exchange per call
-    q_buckets = S.lsh_query_buckets_local(
-        [(r["query_id"], list(r["_qv"])) for r in qd.collect()],
-        planes,
-        spark,
-    )
+    q_buckets = S.lsh_probes(spark, qd, planes)
     cand = (
         b_buckets.join(
             F.broadcast(q_buckets),

@@ -271,6 +271,31 @@ def _lsh_recall_oracle() -> str:
     """
 
 
+def _emb_lsh_index(spark: SparkSession, sf_dir: str):
+    """Session-pinned 8-table × 4-bit LSH index over ``embeddings``:
+    (vectors with norms, bucket table, planes), built once and served to
+    every probe batch of `knn_cosine_lsh` and `knn_lsh_recall_stats`."""
+    planes = S.hyperplanes(64, 8, 4)
+    vecs = shared(
+        ("emb_lsh_vecs", sf_dir),
+        spark,
+        lambda: S.lsh_vectors(load_table(spark, sf_dir, "embeddings"), "vec_id", "embedding"),
+    )
+    b_buckets = shared(
+        ("emb_lsh_buckets", sf_dir, 8, 4),
+        spark,
+        lambda: S.lsh_base_buckets(vecs, "vec_id", planes),
+    )
+    return vecs, b_buckets, planes
+
+
+def _emb_lsh_probes(vecs: DataFrame) -> DataFrame:
+    """The LSH panels' probe batch: vec_id < 5, read off the pinned index."""
+    return vecs.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"), F.col("_bv").alias("embedding")
+    )
+
+
 @register("knn_lsh_recall_stats", oracle=_lsh_recall_oracle())
 def knn_lsh_recall_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-probe quality panel for the LSH index: candidate-set size (the
@@ -279,23 +304,13 @@ def knn_lsh_recall_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     projections, total-order tie-breaks — so the panel is hash-checked
     against a DuckDB mirror of the entire approximate pipeline: the gate
     that was previously rows-only for the LSH family."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    b = emb.select("vec_id", S.as_double(F.col("embedding")).alias("_bv"))
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        S.as_double(F.col("embedding")).alias("_qv"),
-    )
-    planes = S.hyperplanes(64, 8, 4)
-    cand = S.lsh_candidates(b, q, "vec_id", "query_id", planes)
-    ncand = cand.groupBy("query_id").agg(
+    vecs, b_buckets, planes = _emb_lsh_index(spark, sf_dir)
+    queries = _emb_lsh_probes(vecs)
+    q = S.lsh_probes(spark, queries.withColumnRenamed("embedding", "_qv"), planes)
+    ncand = S.lsh_candidates(b_buckets, q, "vec_id").groupBy("query_id").agg(
         F.count(F.lit(1)).alias("n_candidates")
     )
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    lsh10 = S.knn_lsh(emb, queries, k=10, dim=64, n_tables=8, n_bits=4).select(
-        "query_id", "vec_id"
-    )
+    lsh10 = S.lsh_topk(q, vecs, b_buckets, "vec_id", 10).select("query_id", "vec_id")
     exact10 = _truth10(spark, sf_dir).select("query_id", "vec_id")
     ovl = (
         lsh10.join(exact10, ["query_id", "vec_id"])
@@ -303,7 +318,7 @@ def knn_lsh_recall_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("_o"))
     )
     return (
-        q.select("query_id")
+        queries.select("query_id")
         .join(ncand, "query_id", "left")
         .join(ovl, "query_id", "left")
         .select(
@@ -343,12 +358,10 @@ def knn_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hash-checked: the oracle mirrors the deterministic pipeline end to
     end (planes → sign-bit buckets → candidate equi-join → exact rescoring
     → total-order top-k), so even the approximate k-set is value-exact."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
+    vecs, b_buckets, planes = _emb_lsh_index(spark, sf_dir)
+    return S.knn_lsh(
+        vecs, _emb_lsh_probes(vecs), k=10, index=(vecs, b_buckets, planes)
     )
-    out = S.knn_lsh(emb, queries, k=10, dim=64, n_tables=8, n_bits=4)
-    return out.withColumn("rank", F.col("rank").cast("int"))
 
 
 _PQ_M = 8        # subspaces

@@ -55,6 +55,12 @@ def scratch_dir(prefix: str) -> str:
     return tempfile.mkdtemp(prefix=prefix, dir=_root)
 
 
+def in_scratch(path: str) -> bool:
+    """True when ``path`` lies under this process's scratch root."""
+    return _root is not None and os.path.commonpath(
+        [_root, os.path.abspath(path)]) == _root
+
+
 def get_spark(
     app_name: str = "ethical_data_ingestion_spark",
     master: str | None = None,

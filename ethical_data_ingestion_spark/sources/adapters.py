@@ -121,9 +121,12 @@ def raw_to_records(raw: DataFrame, source: SourceSpec | None = None) -> DataFram
     if source is not None:
         raw = raw.filter(F.col("source_name") == source.name)
     named = "source_name" in raw.columns
-    # own projection: Catalyst does not inline a costly expression used twice
+    # own node: Catalyst does not inline a costly expression used twice;
+    # a generator's output, so a filter on the mapped columns (fetch_one's
+    # record_id) stays above the parse instead of being pushed below it
+    # with a second, pruned parse of every payload
     p = raw.select(*(["source_name"] if named else []), "payload",
-                   F.from_json("payload", PAYLOAD_SCHEMA).alias("_j"))
+                   F.explode(F.array(F.from_json("payload", PAYLOAD_SCHEMA))).alias("_j"))
     g = lambda k: F.col("_j")[k]  # noqa: E731
     src = F.col("source_name") if named else g("_source")
     title = F.coalesce(g("name"), F.lit("(untitled)"))

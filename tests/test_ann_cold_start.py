@@ -10,6 +10,8 @@ import subprocess
 import sys
 from pathlib import Path
 
+from conftest import jobs_of
+
 from ethical_data_ingestion_spark import registry
 from ethical_data_ingestion_spark.ann_store import (
     load_chunk_ann_index,
@@ -48,8 +50,13 @@ def test_same_session_disk_serve_matches_pinned(spark, tmp_path):
     idx = str(tmp_path / "idx")
     meta = save_chunk_ann_index(spark, SF_DIR, idx)
     assert meta["n_tables"] == 8 and meta["n_bits"] == 4
-    base, buckets, planes, meta2 = load_chunk_ann_index(spark, idx)
+    assert {f["name"] for f in meta["base_schema"]["fields"]} == {"ckey", "_bv", "_bn"}
+    # the mount reads its schemas from meta: no inference job
+    (base, buckets, planes, meta2), jobs = jobs_of(
+        spark, lambda: load_chunk_ann_index(spark, idx))
+    assert jobs == 0
     assert meta2 == meta
+    assert base.columns == ["ckey", "_bv", "_bn"]
     assert len(planes) == 8 and len(planes[0]) == 4
     served = serve_chunk_ann_from_disk(spark, SF_DIR, idx)
     fresh = registry.QUERIES["chunk_embed_topk_ann"](spark, SF_DIR)

@@ -17,6 +17,7 @@ from pathlib import Path
 
 import pyarrow.parquet as pq
 import pytest
+from conftest import jobs_of
 
 from ethical_data_ingestion_spark import catalog, cli
 
@@ -110,32 +111,6 @@ def test_collect_gates_and_upserts(spark, warehouse):
     assert "UN Comtrade" not in {
         r.source_name for r in spark.table("data_records").select("source_name").distinct().collect()
     }
-
-
-def group_jobs(sc, group: str) -> list[int]:
-    """Job ids of ``group`` once the status listener has caught up: every
-    job finished and the count unchanged over two polls."""
-    st = sc.statusTracker()
-    last = None
-    for _ in range(50):
-        jobs = sorted(st.getJobIdsForGroup(group))
-        done = all((ji := st.getJobInfo(j)) and ji.status != "RUNNING" for j in jobs)
-        if done and jobs == last:
-            return jobs
-        last = jobs
-        time.sleep(0.1)
-    return last
-
-
-def jobs_of(spark, fn):
-    """(result of ``fn()``, number of Spark jobs it issued)."""
-    sc, group = spark.sparkContext, f"jobs_{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(group_jobs(sc, group))
 
 
 def test_collect_is_one_pass(spark, fresh_db, tmp_path):

@@ -291,8 +291,7 @@ def test_mmr_ann_matches_python_greedy_over_ann_pool(spark):
         )
     )
     cand = S.lsh_candidates(
-        base.select("ckey", "_bv"), qd, "ckey", "query_id", planes,
-        base_vec="_bv", query_vec="_qv", b_buckets=b_buckets,
+        b_buckets, S.lsh_probes(spark, qd, planes), "ckey"
     ).filter(
         F2.expr(f"ckey div {EQ._CHUNK_KEYMUL}")
         != (F2.col("query_id") - F2.lit(EQ._CHUNK_QOFF))

@@ -53,23 +53,44 @@ def test_mmr_single_plan_equals_join_form_exact_pool(spark):
     assert got  # non-vacuous
 
 
-def test_mmr_single_plan_equals_join_form_ann_pool(spark):
-    """Same pin on the ANN-served pool (through the registered query, so
-    the published-candidates path is exercised too)."""
+def _ann_window_form(spark, n):
+    """(query_id, ckey, rel): the top-``n`` ANN chunk candidates per RAG
+    probe in the form the serving kernel replaced — distinct candidate
+    pairs, exact rescoring, ``row_number`` over (rel desc, ckey)."""
+    from ethical_data_ingestion_spark.operators import similarity as S
     from ethical_data_ingestion_spark.queries import embed_q as E
     from pyspark.sql import Window, functions as F
 
-    pool = (
-        E._ann_scored_published(spark, SF_DIR)
-        .select((F.col("query_id") - F.lit(E._CHUNK_QOFF)).cast("long")
-                .alias("query_id"),
-                "ckey", F.col("cos").alias("rel"))
+    base, b_buckets, planes = E._chunk_lsh_buckets(spark, SF_DIR)
+    qd = (
+        E._searchable_docs(spark, SF_DIR)
+        .filter(F.col("doc_id") < E._RAG_QUERIES)
+        .select((F.col("doc_id") + F.lit(E._CHUNK_QOFF)).alias("query_id"),
+                S.as_double(F.col("embedding")).alias("_qv"))
+    )
+    cand = S.lsh_candidates(b_buckets, S.lsh_probes(spark, qd, planes), "ckey").filter(
+        F.expr(f"ckey div {E._CHUNK_KEYMUL}")
+        != (F.col("query_id") - F.lit(E._CHUNK_QOFF))
+    )
+    return (
+        cand.join(qd, "query_id").join(base, "ckey")
+        .select((F.col("query_id") - F.lit(E._CHUNK_QOFF)).alias("query_id"),
+                "ckey",
+                F.round(S.cosine(F.col("_qv"), F.col("_bv")), 6).alias("rel"))
         .withColumn("rank", F.row_number().over(
             Window.partitionBy("query_id")
             .orderBy(F.desc("rel"), F.col("ckey"))))
-        .filter(F.col("rank") <= E._MMR_N)
-        .drop("rank")
+        .filter(F.col("rank") <= n)
     )
+
+
+def test_mmr_single_plan_equals_join_form_ann_pool(spark):
+    """Same pin on the ANN-served pool, built here in the window form the
+    serving kernel replaced, so the registered query's kernel-served pool
+    is checked too."""
+    from ethical_data_ingestion_spark.queries import embed_q as E
+
+    pool = _ann_window_form(spark, E._MMR_N).drop("rank")
     cemb = E._chunk_index(spark, SF_DIR)
     cands = pool.join(cemb.select("ckey", "embedding", "n2"), "ckey").select(
         "query_id", "ckey", "embedding", "n2", "rel"
@@ -80,13 +101,19 @@ def test_mmr_single_plan_equals_join_form_ann_pool(spark):
     assert got  # non-vacuous
 
 
-def test_ann_scored_published_matches_direct_serve(spark):
-    """chunk_embed_topk_ann through the published-candidates path must
-    equal the parameterized direct serve (_chunk_ann_serve)."""
+def test_chunk_ann_serve_equals_window_form(spark):
+    """chunk_embed_topk_ann, served by the kernel from the session-pinned
+    index, equals the window form over the same index."""
     from ethical_data_ingestion_spark.queries import embed_q as E
+    from pyspark.sql import functions as F
 
-    base, b_buckets, planes = E._chunk_lsh_buckets(spark, SF_DIR)
-    want = _rows(E._chunk_ann_serve(spark, SF_DIR, base, b_buckets, planes))
+    want = _rows(_ann_window_form(spark, E._RAG_K).select(
+        "query_id",
+        F.expr(f"ckey div {E._CHUNK_KEYMUL}").alias("doc_id"),
+        (F.col("ckey") % E._CHUNK_KEYMUL).alias("chunk_idx"),
+        F.col("rel").alias("cos"),
+        "rank",
+    ))
     got = _rows(registry.QUERIES["chunk_embed_topk_ann"](spark, SF_DIR))
     assert got == want
     assert got  # non-vacuous

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import hashlib
 import json
 import time
 
@@ -155,6 +156,26 @@ def test_fetch_one_point_lookup(spark):
     assert hit[0].url.endswith("/abc-123")
     # miss -> empty, the Optional[None] of the reference
     assert adapters.fetch_one(raw, adapters.NYC_OPEN_DATA, "nope").count() == 0
+
+
+def test_fetch_one_parses_each_payload_once(spark, tmp_path):
+    """Over a text spool, the id filter stays above the payload parse:
+    one ``from_json`` of the payload in the optimized plan (a filter
+    pushed below the parse would bring a second one)."""
+    spool = tmp_path / "payloads.jsonl"
+    lines = [json.dumps({"id": f"id-{i}", "name": f"n{i}"}) for i in range(3)]
+    lines.append(json.dumps({"name": "no id"}))
+    spool.write_text("\n".join(lines) + "\n")
+    raw = spark.read.text(str(spool)).selectExpr(
+        "'NYC Open Data' AS source_name", "value AS payload")
+    hit = adapters.fetch_one(raw, adapters.NYC_OPEN_DATA, "id-1")
+    plan = hit._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("from_json(StructField(") == 1
+    assert [(r.record_id, r.title) for r in hit.collect()] == [("id-1", "n1")]
+    # a payload without an id is found by the md5 of its text
+    md5 = hashlib.md5(lines[-1].encode()).hexdigest()
+    assert [r.title for r in adapters.fetch_one(
+        raw, adapters.NYC_OPEN_DATA, md5).collect()] == ["no id"]
 
 
 def test_raw_to_records_maps_every_source(spark):

@@ -92,3 +92,15 @@ def test_failed_drains_leave_nothing_behind(spark, sf_dir, tmp_path):
     assert spark.streams.active == []
     assert checkpoints(spark) == []
     assert sorted(hourly(spark, sf_dir).collect()) == before
+
+
+def test_released_spools_leave_no_dirs(spark, sf_dir):
+    """``shared_release`` removes the dir of a spool it evicts: spooling
+    and releasing three times leaves at most one spool dir."""
+    from ethical_data_ingestion_spark.materialize import shared_release
+    from ethical_data_ingestion_spark.queries.streaming_q import _spooled_stream
+
+    for _ in range(3):
+        _spooled_stream(spark, sf_dir, 4, 2)
+        shared_release(spark, lambda k: k[0] == "events_spool")
+    assert len(glob.glob(os.path.join(scratch_root(spark), "eds_stream_src_*"))) <= 1
