@@ -539,8 +539,7 @@ def nsw_neighbor_graph(
 
     planes = hyperplanes(dim, n_tables, n_bits)
     b = base.select(F.col(id_col), as_double(F.col(vec_col)).alias("_bv"))
-    buckets = lsh_bucket_udf(planes)
-    bb = b.select(id_col, F.posexplode(buckets("_bv")).alias("t", "bucket"))
+    bb = lsh_base_buckets(b, id_col, planes)
     other = bb.select(
         F.col(id_col).alias("_dst"), F.col("t"), F.col("bucket")
     )

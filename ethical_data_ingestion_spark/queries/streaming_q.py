@@ -22,10 +22,12 @@ on return.
 
 from __future__ import annotations
 
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load_table
+from ..io import load_table, local_frame
 from ..materialize import materialize, shared, shared_publish, shared_value
 from ..registry import register
 from ..session import scratch_dir
@@ -263,16 +265,22 @@ def continuous_rollup_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batches (each rewrites only the day partitions it touched via
     dynamic partition overwrite), then read back. Hash-equality with the
     one-shot GROUP BY proves the incremental maintenance converges to the
-    batch answer."""
-    with P.state_partitions(spark, 4):
-        stream = _spooled_stream(spark, sf_dir, n_files=4, mfpt=2)
-        out_dir = P.incremental_rollup(
-            stream, scratch_dir("eds_rollup_")
+    batch answer. The rollup's days × event-types rows come back as a
+    local relation and its table dir is removed before returning."""
+    out_dir = scratch_dir("eds_rollup_")
+    try:
+        with P.state_partitions(spark, 4):
+            P.incremental_rollup(_spooled_stream(spark, sf_dir, n_files=4, mfpt=2), out_dir)
+        rows = (
+            spark.read.parquet(out_dir)
+            .select("day", "event_type", "n_events", "total_value")
+            .orderBy("day", "event_type")
+            .collect()
         )
-    return (
-        spark.read.parquet(out_dir)
-        .select("day", "event_type", "n_events", "total_value")
-        .orderBy("day", "event_type")
+    finally:
+        shutil.rmtree(out_dir, ignore_errors=True)
+    return local_frame(
+        spark, rows, "day date, event_type string, n_events bigint, total_value double"
     )
 
 
@@ -513,7 +521,7 @@ def _drain_rows(stream: DataFrame) -> DataFrame:
     def _sink(bdf: DataFrame, _bid: int) -> None:
         batches.append(materialize(bdf))
 
-    P.drain(stream.writeStream.foreachBatch(_sink))
+    P.drain_batches(stream, _sink)
     if not batches:
         raise RuntimeError("drain saw no micro-batches")
     rows = batches[0]
@@ -1057,22 +1065,20 @@ def streaming_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-8 (round-7 verdict item 6): ANN serving as a drain — probe vectors
-# ARRIVE as a stream; the index is the maintained static artifact. The
-# stream-static (table, bucket) equi-join is the streaming form of the LSH
-# candidate join, exact rescoring stays JVM-side, and one complete-mode
-# aggregation holds each probe's candidate set (set semantics dedupes
-# multi-table collisions). The per-probe top-k is cut AFTER the drain on
-# the materialized result — sort work on k-bounded arrays, not stream state.
+# ANN serving as a drain: probe vectors ARRIVE as a stream; the index is the
+# maintained static artifact. Each probe's answer depends only on that index,
+# so every micro-batch is served by the batch LSH kernel
+# (``similarity.lsh_topk``) and no streaming state is kept.
 
 _SERVE_K = 10
 _SERVE_BITS = 8  # bits per LSH table for the SERVING index: bucket width
-                 # is corpus/2^bits per table, and the per-probe candidate
-                 # state in the drain is bucket-sized -- 4 bits (the batch
-                 # family's default at fixture scale) blew state up ~16x on
-                 # the 10x sf1 corpus; 8 bits holds state at ~corpus/256
-                 # per (probe, table). This is the standard LSH deployment
-                 # knob (grow bits with corpus), mirrored in the oracle.
+                 # is corpus/2^bits per table, and a probe's candidate set,
+                 # held in one task's aggregation buffer by the kernel, is
+                 # bucket-sized -- 4 bits (the batch family's default at
+                 # fixture scale) grew it ~16x on the 10x sf1 corpus; 8 bits
+                 # holds it at ~corpus/256 per (probe, table). This is the
+                 # standard LSH deployment knob (grow bits with corpus),
+                 # mirrored in the oracle.
 
 
 def _ann_serving_oracle() -> str:
@@ -1104,26 +1110,24 @@ def _ann_serving_oracle() -> str:
 @register("streaming_knn_serving", oracle=_ann_serving_oracle)
 def streaming_knn_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN serving drain: the ~20% delta vectors arrive as a probe STREAM
-    (4 spooled files); candidates come from the stream-static equi-join
-    of the probes' Arrow-computed LSH buckets against the pinned index
-    bucket table, exact cosine rescoring runs in the streaming plan, and
-    a complete-mode per-probe aggregation holds each probe's candidate
-    set. Top-{_SERVE_K} per probe is cut post-drain from the k-boundable
-    candidate sets.
+    (4 spooled files), and each micro-batch is answered by the batch LSH
+    serving kernel against the session-pinned index — driver-built probe
+    buckets (``lsh_probes``), then the top-{_SERVE_K} per probe by exact
+    cosine among its bucket collisions (``lsh_topk``). The batch's answer
+    (≤ |batch|·k rows) is collected in the ``foreachBatch`` callback; the
+    drained answers come back as one local relation ordered by
+    (query_id, rank).
 
-    r13: drained in the largest micro-batch availableNow allows (the
-    ``streaming_sessions_stateful`` rationale — interleaved A/B at sf0.1:
-    2 batches 1.61s → 1 batch 1.09s min-of-3, rows identical). The
-    cross-batch serving property (batch-1 probes stay answered while
-    batch-2 drains) stays pinned at fixture scale by
+    No state store: a probe's answer depends only on the static index, so
+    each micro-batch is served on its own and the answer is batch-local.
+    Drained in the largest micro-batch availableNow allows; the
+    multi-batch replay is pinned row-identical by
     tests/test_streaming_multibatch.py.
 
-    Scale shape: per micro-batch cost is |batch| · bucket-size rows —
-    the static side is the session-pinned index artifact (same blocks
-    `incremental_ann_stats` maintains); no corpus scan, no stream-stream
-    join, state bounded by probes in flight. Hash-checked end to end
-    against the extended LSH pipeline mirror with a disjoint probe
-    relation (``_lsh_pipeline_ctes(q_body=...)``)."""
+    Scale shape: per micro-batch cost is |batch| · bucket-size candidate
+    pairs against the pinned index; no corpus scan, no stream-stream join.
+    Hash-checked end to end against the extended LSH pipeline mirror with
+    a disjoint probe relation (``_lsh_pipeline_ctes(q_body=...)``)."""
     return _knn_serving_drain(spark, sf_dir, mfpt=None)
 
 
@@ -1135,17 +1139,15 @@ def _knn_serving_drain(
 
     emb = load_table(spark, sf_dir, "embeddings")
     planes = S.hyperplanes(64, 8, _SERVE_BITS)
-    index_vecs = shared(
+    vecs = shared(
         ("ann_serving_vecs", sf_dir),
         spark,
-        lambda: emb.filter(~_ann_is_new()).select(
-            "vec_id", S.as_double(F.col("embedding")).alias("_bv")
-        ),
+        lambda: S.lsh_vectors(emb.filter(~_ann_is_new()), "vec_id", "embedding"),
     )
-    index_buckets = shared(
+    buckets = shared(
         ("ann_serving_buckets", sf_dir, 8, _SERVE_BITS),
         spark,
-        lambda: S.lsh_base_buckets(index_vecs, "vec_id", planes),
+        lambda: S.lsh_base_buckets(vecs, "vec_id", planes),
     )
     src = shared_value(
         ("emb_delta_spool", sf_dir),
@@ -1157,62 +1159,26 @@ def _knn_serving_drain(
             ts_col="vec_id",
         ),
     )
-    with P.state_partitions(spark, 4):
-        probes = P.stream_from(
-            spark,
-            src,
-            schema_ddl="vec_id long, embedding array<float>, label int",
-            max_files_per_trigger=mfpt,
-        ).select(
-            F.col("vec_id").alias("query_id"),
-            S.as_double(F.col("embedding")).alias("_qv"),
-        )
-        buckets = S.lsh_bucket_udf(planes)
-        qb = probes.select(
-            "query_id", "_qv", F.posexplode(buckets("_qv")).alias("t", "bucket")
-        )
-        # broadcast the static index sides: per-executor serving shards
-        # (a streaming plan can't AQE-reshuffle them per micro-batch, and
-        # a checkpointed static side has no size stats to auto-broadcast)
-        cand = qb.join(
-            F.broadcast(
-                index_buckets.select(
-                    F.col("vec_id"), F.col("t"), F.col("bucket")
-                )
-            ),
-            ["t", "bucket"],
-        ).select("query_id", "_qv", "vec_id")
-        scored = cand.join(
-            F.broadcast(index_vecs.select("vec_id", "_bv")), "vec_id"
-        ).select(
-            "query_id",
-            "vec_id",
-            F.round(S.cosine(F.col("_qv"), F.col("_bv")), 6).alias("cos"),
-        )
-        agg = scored.groupBy("query_id").agg(
-            F.collect_set(
-                F.struct(
-                    (-F.col("cos")).alias("negcos"),
-                    F.col("vec_id").alias("vec_id"),
-                    F.col("cos").alias("cos"),
-                )
-            ).alias("cands")
-        )
-        out = P.run_available_now(agg, output_mode="complete")
-    return (
-        out.select(
-            "query_id",
-            F.posexplode(
-                F.slice(F.array_sort("cands"), 1, _SERVE_K)
-            ).alias("pos", "c"),
-        )
-        .select(
-            "query_id",
-            F.col("c.vec_id").alias("vec_id"),
-            F.col("c.cos").alias("cos"),
-            (F.col("pos") + 1).cast("int").alias("rank"),
-        )
-        .orderBy("query_id", "rank")
+    rows: list = []
+
+    def _serve(batch: DataFrame, _bid: int) -> None:
+        q = S.lsh_probes(spark, batch, planes)
+        rows.extend(S.lsh_topk(q, vecs, buckets, "vec_id", _SERVE_K).collect())
+
+    probes = P.stream_from(
+        spark,
+        src,
+        schema_ddl="vec_id long, embedding array<float>, label int",
+        max_files_per_trigger=mfpt,
+    ).select(
+        F.col("vec_id").alias("query_id"),
+        S.as_double(F.col("embedding")).alias("_qv"),
+    )
+    P.drain_batches(probes, _serve)
+    return local_frame(
+        spark,
+        sorted(rows, key=lambda r: (r.query_id, r.rank)),
+        "query_id bigint, vec_id bigint, cos double, rank int",
     )
 
 

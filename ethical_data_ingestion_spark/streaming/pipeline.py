@@ -24,7 +24,7 @@ from __future__ import annotations
 
 import itertools
 import shutil
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from contextlib import contextmanager
 
 import pandas as pd
@@ -183,6 +183,27 @@ def drain(writer: DataStreamWriter) -> None:
             q.stop()  # a no-op once the drain has finished
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def drain_batches(stream: DataFrame, fn: Callable[[DataFrame, int], None]) -> None:
+    """:func:`drain` ``stream`` through ``foreachBatch(fn)``, each batch
+    under the caller's job group. A streaming query runs its micro-batches
+    on its own thread, in a job group named after its run id, so the work
+    ``fn`` starts would otherwise leave the group the caller counts or
+    cancels by. The callback thread is reused across drains, so its
+    previous group is restored after each batch."""
+    sc = stream.sparkSession.sparkContext
+    group = sc.getLocalProperty("spark.jobGroup.id")
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        prev = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            fn(batch_df, batch_id)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", prev)
+
+    drain(stream.writeStream.foreachBatch(run))
 
 
 def run_available_now(
@@ -457,7 +478,7 @@ def audit_sink(stream: DataFrame, out_dir: str) -> "DataFrame":
             .parquet(out_dir)
         )
 
-    drain(stream.writeStream.foreachBatch(write_batch))
+    drain_batches(stream, write_batch)
     return stream
 
 
@@ -531,7 +552,7 @@ def incremental_rollup(
         finally:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
 
-    drain(stream.writeStream.foreachBatch(merge_batch))
+    drain_batches(stream, merge_batch)
     return out_dir
 
 

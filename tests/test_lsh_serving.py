@@ -1,7 +1,8 @@
 """The LSH serving kernel (``similarity.lsh_topk``) and the warm retrieval
 calls routed through it: the kernel equals the window form it replaced,
-edge cases included, and each warm batch call runs in a handful of Spark
-jobs with no Python worker, window or range exchange in its plan."""
+edge cases included, and each warm call, the streaming drain included,
+runs in a handful of Spark jobs; the batch calls' plans hold no Python
+worker, window or range exchange."""
 
 from __future__ import annotations
 
@@ -15,7 +16,7 @@ from ethical_data_ingestion_spark import ann_store, registry
 from ethical_data_ingestion_spark.io import load_table, local_frame
 from ethical_data_ingestion_spark.operators import similarity as S
 
-#: jobs of one warm batch retrieval call: the probe collect, the two
+#: jobs of one warm retrieval call: the probe collect, the two
 #: broadcasts (probe relation, base vectors), the top-k aggregate's
 #: shuffle and the result; the window form issued 8-10
 JOBS_PER_WARM_CALL = 5
@@ -141,14 +142,17 @@ def test_kernel_on_registered_panel_equals_window_form(spark):
 
 @pytest.fixture(scope="module")
 def warm_calls(spark, tmp_path_factory):
-    """The three warm batch retrieval calls of the serving benchmark, each
-    run once so that its session pins exist."""
+    """The four warm retrieval calls of the serving benchmark, each run
+    once so that its session pins exist. ``streaming_knn_serving`` serves
+    each micro-batch with the same kernel, and its batch jobs are counted
+    in the caller's job group."""
     idx = str(tmp_path_factory.mktemp("ann") / "idx")
     ann_store.save_chunk_ann_index(spark, SF_DIR, idx)
     calls = {
         "chunk_embed_topk_ann": lambda: registry.QUERIES["chunk_embed_topk_ann"](spark, SF_DIR),
         "knn_cosine_lsh": lambda: registry.QUERIES["knn_cosine_lsh"](spark, SF_DIR),
         "serve_chunk_ann_from_disk": lambda: ann_store.serve_chunk_ann_from_disk(spark, SF_DIR, idx),
+        "streaming_knn_serving": lambda: registry.QUERIES["streaming_knn_serving"](spark, SF_DIR),
     }
     for fn in calls.values():
         fn().collect()
@@ -156,7 +160,8 @@ def warm_calls(spark, tmp_path_factory):
 
 
 @pytest.mark.parametrize(
-    "name", ["chunk_embed_topk_ann", "knn_cosine_lsh", "serve_chunk_ann_from_disk"]
+    "name", ["chunk_embed_topk_ann", "knn_cosine_lsh", "serve_chunk_ann_from_disk",
+             "streaming_knn_serving"]
 )
 def test_warm_call_job_count(spark, warm_calls, name):
     got, jobs = jobs_of(spark, lambda: warm_calls[name]().collect())

@@ -7,10 +7,12 @@ import glob
 import os
 import tempfile
 
+from conftest import jobs_of
 from pyspark.sql import functions as F
 
 from ethical_data_ingestion_spark.io import load_table
 from ethical_data_ingestion_spark.operators import windows as W
+from ethical_data_ingestion_spark.queries.streaming_q import _drain_rows
 from ethical_data_ingestion_spark.streaming import pipeline as P
 
 
@@ -93,6 +95,19 @@ def test_audit_sink_appends_batches_with_ids(spark, sf_dir, tmp_path):
     assert audit.count() == ev.count()
     assert [r.batch_id for r in audit.select("batch_id").distinct().collect()] is not None
     assert audit.select("batch_id").distinct().count() == 2
+
+
+def test_drained_batches_run_in_callers_job_group(spark, sf_dir, tmp_path):
+    """A ``foreachBatch`` drain's batch work (here ``_drain_rows``' per-batch
+    pin) is counted in the caller's job group, not the stream's own; a
+    second drain from another group is counted in that one."""
+    ev = _events(spark, sf_dir)
+    src = P.spool(ev, str(tmp_path / "src"), 2)
+    for _ in range(2):
+        rows, jobs = jobs_of(spark, lambda: _drain_rows(
+            P.stream_from(spark, src, max_files_per_trigger=1)))
+        assert jobs >= 2  # one pin per micro-batch
+        assert rows.count() == ev.count()
 
 
 def test_sliding_stream_complete_equals_batch(spark, sf_dir, tmp_path):

@@ -16,7 +16,7 @@ from ethical_data_ingestion_spark.io import load_table
 from ethical_data_ingestion_spark.registry import QUERIES
 from ethical_data_ingestion_spark.streaming import pipeline as P
 
-SOAK = ("streaming_knn_serving", "streaming_tumbling_hourly")
+SOAK = ("streaming_knn_serving", "streaming_tumbling_hourly", "continuous_rollup_daily")
 
 
 def scratch_root(spark) -> str:

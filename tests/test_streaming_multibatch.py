@@ -5,9 +5,10 @@ The registered ``streaming_purchase_click_join`` and
 allows (every extra batch re-pays per-(state store × partition × batch)
 commits — the ``streaming_sessions_stateful`` rationale). These tests
 keep the CROSS-BATCH property honest at fixture scale: a forced
-multi-batch replay (maxFilesPerTrigger=1 → 4 micro-batches, state handed
-off across them) must be row-identical to the registered single-batch
-drain.
+multi-batch replay (maxFilesPerTrigger=1 → 4 micro-batches) must be
+row-identical to the registered single-batch drain — for the join, with
+state handed off across batches; for serving, which keeps no state, with
+each batch answered on its own.
 """
 
 from __future__ import annotations
