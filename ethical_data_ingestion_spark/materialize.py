@@ -45,7 +45,8 @@ words). The package keeps no other module-global cache of session
 results. Pinned blocks never free themselves, so there are three
 release paths, each freeing through the mode's one routine (``_FREE``):
 
-* :func:`unpin`             — one loop round, once its successor is pinned;
+* :func:`unpin`             — one loop round or drained batch, once its
+                              successor is pinned;
 * :func:`shared_release`    — store entries; later callers rebuild;
 * :func:`transient_release` — every persistent RDD the store does not own.
 """
@@ -244,13 +245,20 @@ def shared_get(key: tuple, spark) -> DataFrame | None:
     return None if hit is None else hit[1]
 
 
-def shared_publish(key: tuple, spark, df: DataFrame) -> DataFrame:
-    """Materialize ``df`` and publish it under ``key``, recording the
-    persistent RDDs its pin registered; returns the pinned result."""
+def pin_owned(spark, df: DataFrame) -> tuple[DataFrame, tuple | None]:
+    """:func:`materialize` ``df``; returns the pin and the ids of the
+    persistent RDDs it registered (None when either snapshot failed),
+    which is what freeing that one pin later needs."""
     before = _persistent_ids(spark)
     pinned = materialize(df)
     after = _persistent_ids(spark)
-    owned = None if before is None or after is None else tuple(after - before)
+    return pinned, None if before is None or after is None else tuple(after - before)
+
+
+def shared_publish(key: tuple, spark, df: DataFrame) -> DataFrame:
+    """Materialize ``df`` and publish it under ``key``, recording the
+    persistent RDDs its pin registered; returns the pinned result."""
+    pinned, owned = pin_owned(spark, df)
     _SHARED[key] = (spark, pinned, owned)
     return pinned
 
@@ -273,16 +281,18 @@ def shared(key: tuple, spark, build) -> DataFrame:
     return shared_publish(key, spark, build())
 
 
-def unpin(df: DataFrame | None, mode: str | None = None) -> None:
+def unpin(df: DataFrame | None, owned: tuple | None = ()) -> None:
     """Release a :func:`materialize`'d DataFrame once NO downstream
     consumer remains (e.g. an iterative loop's previous round after the
     next round has been pinned). Under ``disk`` this drops the cached
     plan entry and its blocks — without it, every loop round would stay
     registered in the CacheManager for session life. Under ``local`` it
-    is a no-op: a loop round owns no tracked ids, and its blocks are
-    freed by :func:`transient_release` once the query returns."""
+    unpersists ``owned``, the ids :func:`pin_owned` recorded (a
+    complete-mode drain's replaced batch); a loop round passes none, so
+    it is a no-op there and its blocks are freed by
+    :func:`transient_release` once the query returns."""
     if df is not None:
-        _FREE[_mode(mode)](df, ())
+        _FREE[_mode()](df, owned)
 
 
 def transient_release(spark) -> int:

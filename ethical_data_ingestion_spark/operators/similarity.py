@@ -51,7 +51,9 @@ def norm(a: Column) -> Column:
 
 
 def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+    """Cosine similarity; NULL when either vector has zero norm, with or
+    without ANSI mode (a bare 0 divisor is an error under ANSI)."""
+    return dot(a, b) / F.nullif(norm(a) * norm(b), F.lit(0.0))
 
 
 def knn_bruteforce(
@@ -161,7 +163,7 @@ def lsh_probes(spark, probes: DataFrame, planes: list[list[list[float]]]) -> Dat
 
     ``_qn`` is the strict dimension-order fold of x·x, then sqrt — the
     same IEEE operations, in the same order, as :func:`norm`, so
-    ``dot / (_qn * _bn)`` is bit-identical to :func:`cosine`."""
+    ``dot / nullif(_qn * _bn, 0)`` is bit-identical to :func:`cosine`."""
     from pyspark.sql.types import ArrayType, DoubleType, IntegerType, StructField, StructType
 
     rows = probes.select("query_id", "_qv").collect()
@@ -260,7 +262,7 @@ def lsh_topk(
     gathers each probe's distinct candidate ids (``collect_set``: a pair
     colliding in several tables is one id); the ids are exploded, joined
     to their vectors and scored once per pair with one SQL fold,
-    ``dot(_qv, _bv) / (_qn * _bn)`` rounded to 6 places — bit-identical
+    ``dot(_qv, _bv) / nullif(_qn * _bn, 0)`` rounded to 6 places — bit-identical
     to :func:`cosine`. The second, on the same partitioning, sorts each
     probe's ``(cos, -id)`` list descending, slices ``k`` and numbers it,
     then ``inline``. The cut comes after the merge, so each probe's whole
@@ -268,9 +270,9 @@ def lsh_topk(
     spill (DEPLOY: ANN). The order is that of ``row_number() OVER
     (PARTITION BY query_id ORDER BY cos DESC, id)``: ties go to the
     smaller id, a NaN cosine ranks first and a NULL one last. A zero-norm
-    vector divides by zero, as in :func:`cosine`: NULL, or under ANSI
-    mode an error. A probe without candidates yields no rows. Ids must
-    be integral (they are negated for the tie-break). The ≤ |probes|·k
+    vector scores NULL, as in :func:`cosine`, in both ANSI modes. A probe
+    without candidates yields no rows. Ids must be integral (they are
+    negated for the tie-break). The ≤ |probes|·k
     result is ordered by (query_id, rank) in one partition, with no
     window and no range exchange."""
     cand = (
@@ -288,7 +290,7 @@ def lsh_topk(
         .groupBy("query_id")
         .agg(F.expr(
             "transform(slice(sort_array(collect_list(struct(round(aggregate(zip_with("
-            "_qv, _bv, (x, y) -> x * y), 0D, (acc, v) -> acc + v) / (_qn * _bn), 6)"
+            "_qv, _bv, (x, y) -> x * y), 0D, (acc, v) -> acc + v) / nullif(_qn * _bn, 0D), 6)"
             f" AS cos, -{id_col} AS nid)), false), 1, {k}), (c, i) -> "
             f"struct(-c.nid AS {id_col}, c.cos AS cos, i + 1 AS rank))"
         ).alias("top"))

@@ -16,8 +16,9 @@ streaming engine gets the DuckDB hash gate:
 Spooling: events are re-written as range-partitioned files (chronological
 arrival order) under a scratch dir, once per session (the path is a
 ``shared_value``) — the micro-batch sequence is the point, not the copy.
-Every drain goes through ``pipeline.drain``, which removes its checkpoint
-on return.
+Every drain is a ``foreachBatch`` drain through ``pipeline.drain``,
+which removes its checkpoint on return; its batch jobs run in the
+caller's job group.
 """
 
 from __future__ import annotations
@@ -28,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load_table, local_frame
-from ..materialize import materialize, shared, shared_publish, shared_value
+from ..materialize import shared, shared_publish, shared_value
 from ..registry import register
 from ..session import scratch_dir
 from ..streaming import pipeline as P
@@ -68,8 +69,8 @@ def streaming_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     across batches, which is the property under test; more batches only
     multiply fixed per-commit overhead), complete-mode so the final table
     equals the batch aggregation bit-for-bit. Append mode + watermark is
-    the production shape (see streaming/pipeline.py); complete into the
-    memory sink is the test/driver harness.
+    the production shape (see streaming/pipeline.py); complete mode keeps
+    only the last micro-batch's pin (``pipeline.run_available_now``).
 
     4 state partitions: windowed-agg state is JVM-side and tiny (one row
     per open (window × key)); each partition pays a per-batch state-store
@@ -208,9 +209,7 @@ def streaming_sessions_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical."""
     with P.state_partitions(spark, 24), P.rocksdb_state_store(spark):
         stream = _spooled_stream(spark, sf_dir, n_files=4, mfpt=None)
-        sess = P.run_available_now(
-            P.sessionize_stateful(stream, _SESSION_GAP_S), name=None
-        )
+        sess = P.run_available_now(P.sessionize_stateful(stream, _SESSION_GAP_S))
     return _guard_sessions(sess, spark, sf_dir)
 
 
@@ -512,24 +511,6 @@ def _doc_batch_stream(spark: SparkSession, sf_dir: str, mfpt: int | None) -> Dat
     )
 
 
-def _drain_rows(stream: DataFrame) -> DataFrame:
-    """ONE foreachBatch pass that drains ``stream`` and returns the pinned
-    union of its micro-batches; backs the session-shared drained-rows
-    artifacts below."""
-    batches: list[DataFrame] = []
-
-    def _sink(bdf: DataFrame, _bid: int) -> None:
-        batches.append(materialize(bdf))
-
-    P.drain_batches(stream, _sink)
-    if not batches:
-        raise RuntimeError("drain saw no micro-batches")
-    rows = batches[0]
-    for b in batches[1:]:
-        rows = rows.unionByName(b)
-    return rows
-
-
 def _drained_doc_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-shared drained delta-document rows: ONE ingest stream pass
     (one file-source listing, one trigger sequence, one checkpoint)
@@ -541,7 +522,7 @@ def _drained_doc_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _build() -> DataFrame:
         with P.state_partitions(spark, 4):
-            return _drain_rows(_doc_batch_stream(spark, sf_dir, mfpt=2))
+            return P.run_available_now(_doc_batch_stream(spark, sf_dir, mfpt=2))
 
     return shared(("drained_doc_rows", sf_dir), spark, _build)
 
@@ -717,7 +698,7 @@ def _drained_event_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _build() -> DataFrame:
         with P.state_partitions(spark, 4):
-            return _drain_rows(_spooled_stream(spark, sf_dir, n_files=4, mfpt=2))
+            return P.run_available_now(_spooled_stream(spark, sf_dir, n_files=4, mfpt=2))
 
     return shared(("drained_event_rows", sf_dir), spark, _build)
 

@@ -15,14 +15,14 @@ limits feeding row-at-a-time inserts (``ethical_crawler.py:293-302,
 
 Scale: streaming state lives in the state store, partitioned by grouping
 key across executors; the watermark is what keeps it bounded — without it
-a 100 TB/day stream accretes state forever. The memory sink used by tests
-and driver checks is a test harness only; production sinks are the
-parquet/foreachBatch paths.
+a 100 TB/day stream accretes state forever. Every drain is a
+``foreachBatch`` drain (:func:`drain_batches`) whose batch jobs run in
+the caller's job group; no drain goes through a sink table.
 """
 
 from __future__ import annotations
 
-import itertools
+import functools
 import shutil
 from collections.abc import Callable, Iterator
 from contextlib import contextmanager
@@ -33,7 +33,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..materialize import materialize
+from ..io import local_frame
+from ..materialize import pin_owned, unpin
 from ..operators import windows as W
 from ..session import scratch_dir
 
@@ -43,8 +44,6 @@ EVENTS_DDL = (
     "event_id bigint, ts timestamp_ntz, user_id bigint, "
     "event_type string, value double, props string"
 )
-
-_uniq = itertools.count()
 
 _EPOCH_NTZ = "TIMESTAMP_NTZ'1970-01-01 00:00:00'"
 
@@ -185,13 +184,17 @@ def drain(writer: DataStreamWriter) -> None:
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def drain_batches(stream: DataFrame, fn: Callable[[DataFrame, int], None]) -> None:
-    """:func:`drain` ``stream`` through ``foreachBatch(fn)``, each batch
-    under the caller's job group. A streaming query runs its micro-batches
-    on its own thread, in a job group named after its run id, so the work
-    ``fn`` starts would otherwise leave the group the caller counts or
-    cancels by. The callback thread is reused across drains, so its
-    previous group is restored after each batch."""
+def drain_batches(
+    stream: DataFrame,
+    fn: Callable[[DataFrame, int], None],
+    output_mode: str = "append",
+) -> None:
+    """:func:`drain` ``stream`` through ``foreachBatch(fn)`` in
+    ``output_mode``, each batch under the caller's job group. A streaming
+    query runs its micro-batches on its own thread, in a job group named
+    after its run id, so the work ``fn`` starts would otherwise leave the
+    group the caller counts or cancels by. The callback thread is reused
+    across drains, so its previous group is restored after each batch."""
     sc = stream.sparkSession.sparkContext
     group = sc.getLocalProperty("spark.jobGroup.id")
 
@@ -203,31 +206,32 @@ def drain_batches(stream: DataFrame, fn: Callable[[DataFrame, int], None]) -> No
         finally:
             sc.setLocalProperty("spark.jobGroup.id", prev)
 
-    drain(stream.writeStream.foreachBatch(run))
+    drain(stream.writeStream.outputMode(output_mode).foreachBatch(run))
 
 
-def run_available_now(
-    sdf: DataFrame, output_mode: str = "append", name: str | None = None
-) -> DataFrame:
-    """Drain the stream to completion (``trigger(availableNow)``) into a
-    memory sink and return the result as a batch DataFrame. availableNow
-    processes the backlog in rate-limited micro-batches then stops; each
-    call starts from a fresh checkpoint (:func:`drain`)."""
-    name = name or f"eds_stream_{next(_uniq)}"
+def run_available_now(sdf: DataFrame, output_mode: str = "append") -> DataFrame:
+    """Drain the stream to completion (``trigger(availableNow)``, a fresh
+    checkpoint per call: :func:`drain`) and return its rows as a batch
+    DataFrame. Each micro-batch is pinned in the :func:`drain_batches`
+    callback, so its rows stay on the executors and its jobs run in the
+    caller's job group. ``append`` returns the union of the batch pins;
+    ``complete`` re-emits the whole table each batch, so only the last pin
+    is kept and the one it replaces is freed by the RDD ids it registered.
+    A drain that ran no batch returns an empty frame with the stream's
+    schema."""
     spark = sdf.sparkSession
-    try:
-        drain(sdf.writeStream.format("memory").queryName(name).outputMode(output_mode))
-        # detach the result from the memory sink (checkpoint = one stable
-        # copy in block storage); the sink view is dropped below, so
-        # repeated or failed drains in one session leave no sink tables.
-        # The sink's MemoryPlan cannot be re-instanced, so a self-join
-        # over it fails analysis unless its columns are re-aliased first;
-        # a ``local`` pin hides that behind a fresh LogicalRDD, but a
-        # ``disk`` pin keeps the plan.
-        sink = spark.table(name)
-        return materialize(sink.toDF(*sink.columns))
-    finally:
-        spark.catalog.dropTempView(name)
+    pins: list[tuple[DataFrame, tuple | None]] = []
+
+    def keep(batch_df: DataFrame, _batch_id: int) -> None:
+        pin = pin_owned(spark, batch_df)
+        if output_mode == "complete" and pins:
+            unpin(*pins.pop())
+        pins.append(pin)
+
+    drain_batches(sdf, keep, output_mode)
+    if not pins:
+        return local_frame(spark, [], sdf.schema)
+    return functools.reduce(DataFrame.unionByName, (df for df, _ in pins))
 
 
 def tumbling_stream(

@@ -87,7 +87,7 @@ def fixture(spark):
         if (buckets(p) == 0).all() and (buckets(-p) == 1).all() and (buckets(near) == 0).all():
             break
     base = local_frame(spark, [
-        (1, [0.0] * DIM),       # zero norm: its cosine divides by zero
+        (1, [0.0] * DIM),       # zero norm: its cosine is NULL
         (5, list(3 * p)),       # 5, 2 and 3 tie on cos 1.0: ids break the tie
         (2, list(p)),
         (3, list(p)),
@@ -100,11 +100,14 @@ def fixture(spark):
     return base, probes, planes
 
 
-@pytest.mark.parametrize("k", [2, 4, 10])
-def test_kernel_equals_window_form(spark, fixture, ansi, k):
-    """Without ANSI mode, the zero-norm base vector's cosine is NULL in
-    both forms, and ``desc(cos)`` ranks it last."""
-    ansi(False)
+@pytest.mark.parametrize("on,k", [
+    pytest.param(on, k, id=f"{k}-ansi" if on else str(k))
+    for on in (False, True) for k in (2, 4, 10)
+])
+def test_kernel_equals_window_form(spark, fixture, ansi, on, k):
+    """With ANSI mode on or off, the zero-norm base vector's cosine is
+    NULL in both forms, and ``desc(cos)`` ranks it last."""
+    ansi(on)
     base, probes, planes = fixture
     got = rows(kernel_topk(spark, base, probes, planes, k))
     assert got == rows(window_topk(spark, base, probes, planes, k))
@@ -117,15 +120,6 @@ def test_kernel_equals_window_form(spark, fixture, ansi, k):
     assert k < 5 or got[-1][2] is None
     assert {r[0] for r in got} == {100}
     assert [r[3] for r in got] == list(range(1, len(got) + 1))
-
-
-def test_kernel_zero_norm_fails_like_window_form_under_ansi(spark, fixture, ansi):
-    """Under ANSI mode both forms fail on the zero-norm vector's 0/0."""
-    ansi(True)
-    base, probes, planes = fixture
-    for form in (kernel_topk, window_topk):
-        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
-            form(spark, base, probes, planes, 10).collect()
 
 
 def test_kernel_on_registered_panel_equals_window_form(spark):

@@ -6,13 +6,14 @@ from __future__ import annotations
 import glob
 import os
 import tempfile
+import time
 
+import pytest
 from conftest import jobs_of
 from pyspark.sql import functions as F
 
 from ethical_data_ingestion_spark.io import load_table
 from ethical_data_ingestion_spark.operators import windows as W
-from ethical_data_ingestion_spark.queries.streaming_q import _drain_rows
 from ethical_data_ingestion_spark.streaming import pipeline as P
 
 
@@ -97,17 +98,58 @@ def test_audit_sink_appends_batches_with_ids(spark, sf_dir, tmp_path):
     assert audit.select("batch_id").distinct().count() == 2
 
 
-def test_drained_batches_run_in_callers_job_group(spark, sf_dir, tmp_path):
-    """A ``foreachBatch`` drain's batch work (here ``_drain_rows``' per-batch
-    pin) is counted in the caller's job group, not the stream's own; a
-    second drain from another group is counted in that one."""
+def _newest_job(spark) -> int:
+    """Id of the newest job in the status store, read once two polls
+    0.1 s apart agree (the store is fed by an asynchronous listener).
+    Job ids are sequential, so the difference of two reads counts every
+    job started in between, in any group."""
+    store, seen = spark.sparkContext._jsc.sc().statusStore(), None
+    for _ in range(50):
+        jobs = store.jobsList(None)  # the newest first
+        newest = jobs.apply(0).jobId() if jobs.size() else -1
+        if newest == seen:
+            return newest
+        seen = newest
+        time.sleep(0.1)
+    return seen
+
+
+@pytest.mark.parametrize("output_mode", ["append", "complete"])
+def test_drained_batches_run_in_callers_job_group(spark, sf_dir, tmp_path, output_mode):
+    """Every job a ``run_available_now`` drain starts (the micro-batches'
+    and the per-batch pins) runs in the caller's job group, not the
+    stream's own; a second drain from another group runs in that one."""
     ev = _events(spark, sf_dir)
     src = P.spool(ev, str(tmp_path / "src"), 2)
+
+    def drain():
+        sdf = P.stream_from(spark, src, max_files_per_trigger=1)
+        if output_mode == "complete":
+            sdf = sdf.groupBy("event_type").count()
+        return P.run_available_now(sdf, output_mode)
+
     for _ in range(2):
-        rows, jobs = jobs_of(spark, lambda: _drain_rows(
-            P.stream_from(spark, src, max_files_per_trigger=1)))
+        before = _newest_job(spark)
+        rows, jobs = jobs_of(spark, drain)
         assert jobs >= 2  # one pin per micro-batch
-        assert rows.count() == ev.count()
+        assert _newest_job(spark) - before == jobs  # none outside the group
+        if output_mode == "append":
+            assert rows.count() == ev.count()
+        else:
+            assert sorted(rows.collect()) == sorted(ev.groupBy("event_type").count().collect())
+
+
+@pytest.mark.parametrize("output_mode", ["append", "complete"])
+def test_drain_of_empty_source_returns_empty_frame(spark, tmp_path, output_mode):
+    """A drain that runs no micro-batch returns no rows, with the stream's
+    columns."""
+    (tmp_path / "src").mkdir()
+    sdf = P.stream_from(spark, str(tmp_path / "src"))
+    if output_mode == "complete":
+        sdf = sdf.groupBy("event_type").count()
+    out = P.run_available_now(sdf, output_mode)
+    assert out.columns == sdf.columns
+    assert out.count() == 0
 
 
 def test_sliding_stream_complete_equals_batch(spark, sf_dir, tmp_path):

@@ -1,6 +1,7 @@
 """A long-lived session stays bounded across streaming drains: warm
-cycles add no scratch entries, exit hooks, queries or temp views, and a
-drain that fails leaves no query, sink view or checkpoint behind."""
+cycles add no scratch entries, exit hooks, queries, temp views or
+persisted RDDs, and a drain that fails leaves no query, temp view or
+checkpoint behind."""
 
 from __future__ import annotations
 
@@ -13,10 +14,12 @@ from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from ethical_data_ingestion_spark.io import load_table
+from ethical_data_ingestion_spark.materialize import transient_release
 from ethical_data_ingestion_spark.registry import QUERIES
 from ethical_data_ingestion_spark.streaming import pipeline as P
 
-SOAK = ("streaming_knn_serving", "streaming_tumbling_hourly", "continuous_rollup_daily")
+SOAK = ("streaming_knn_serving", "streaming_tumbling_hourly", "continuous_rollup_daily",
+        "streaming_dedup_keys", "streaming_enriched_segments")
 
 
 def scratch_root(spark) -> str:
@@ -43,7 +46,7 @@ def temp_views(spark) -> list[str]:
 
 def state(spark) -> tuple:
     return (scratch_entries(spark), atexit._ncallbacks(), len(spark.streams.active),
-            temp_views(spark))
+            temp_views(spark), len(spark.sparkContext._jsc.getPersistentRDDs()))
 
 
 def checkpoints(spark) -> list[str]:
@@ -55,6 +58,7 @@ def test_warm_drain_cycles_leave_session_flat(spark, sf_dir):
     for _ in range(6):
         for name in SOAK:
             QUERIES[name](spark, sf_dir).collect()
+        transient_release(spark)
         seen.append(state(spark))
     assert seen[2][2] == 0 and spark.streams.active == []
     assert seen[2:] == [seen[2]] * 4, seen
@@ -77,8 +81,7 @@ def test_failed_drains_leave_nothing_behind(spark, sf_dir, tmp_path):
 
     stream = _spooled_events(spark, sf_dir, tmp_path)
     with pytest.raises(StreamingQueryException, match="injected drain failure"):
-        P.run_available_now(stream.select(boom("event_id").alias("x")),
-                            name="eds_fault_sink")
+        P.run_available_now(stream.select(boom("event_id").alias("x")))
     assert spark.streams.active == []
     assert temp_views(spark) == views
     assert checkpoints(spark) == []
